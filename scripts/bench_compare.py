@@ -5,7 +5,10 @@ Usage: bench_compare.py OLD NEW [--top N]
 
 Accepts either the raw one-line Bench JSON ({"metric":"total",...,
 "queries":{...}}) or a driver BENCH_r{N}.json wrapper (reads the
-"queries" dict out of the tail's full line when present).
+"queries" dict out of the tail's full line when present). Keys in
+either file's "failed" map (a query that threw, with its exception
+class) are printed by name: they are absent from "queries", so they
+would otherwise drop silently out of the common-key diff.
 """
 import json
 import re
@@ -13,15 +16,19 @@ import sys
 
 
 def load(path):
+    """(queries, failed) of one Bench output; failed is {} for artifacts
+    written before Bench reported failures."""
     with open(path) as f:
         d = json.load(f)
     if "queries" in d:
-        return d["queries"]
+        return d["queries"], d.get("failed", {})
     # driver wrapper: the full line lives in the captured tail
-    m = re.search(r'"queries":(\{[^}]*\})', d.get("tail", ""))
+    tail = d.get("tail", "")
+    m = re.search(r'"queries":(\{[^}]*\})', tail)
     if not m:
         sys.exit(f"{path}: no queries dict found")
-    return json.loads(m.group(1))
+    f = re.search(r'"failed":(\{[^}]*\})', tail)
+    return json.loads(m.group(1)), json.loads(f.group(1)) if f else {}
 
 
 def main():
@@ -46,7 +53,11 @@ def main():
         i += 1
     if len(args) != 2:
         sys.exit(__doc__.strip().splitlines()[2])
-    old, new = load(args[0]), load(args[1])
+    (old, old_failed), (new, new_failed) = load(args[0]), load(args[1])
+    for name, failed in (("failed-old", old_failed),
+                         ("failed-new", new_failed)):
+        for k in sorted(failed):
+            print(f"{name}: {k} ({failed[k]})")
     both = sorted(set(old) & set(new),
                   key=lambda k: abs(new[k] - old[k]), reverse=True)
     print(f"{'query':40s} {'old':>8s} {'new':>8s} {'delta':>8s}")

@@ -10,7 +10,10 @@ artifact.json = the round's controlled REPS=3 artifact
 
 Prints a markdown table of per-FAMILY totals (family = key prefix up to
 the first '_') over the keys common to both files, plus the total
-ratio. The point (r16 verdict ask #6): the reps=1 gate swings ±30-50%
+ratio. Keys in either file's "failed" map (a query that threw) are
+listed by name first, since they are absent from "queries" and would
+otherwise drop silently out of the common-key set. The point (r16
+verdict ask #6): the reps=1 gate swings ±30-50%
 with hypervisor weather, and pricing the noise per family each round —
 instead of re-litigating it — is the cheap durable fix.
 """
@@ -27,11 +30,15 @@ def load(path):
         # driver BENCH_r{N}.json wraps the full line under "tail"
         raise SystemExit(f"{path}: no 'queries' map — pass the full "
                          "bench line file (bench_full.json / *_reps3.json)")
-    return qs
+    return qs, doc.get("failed", {})
 
 
 def main():
-    gate, art = load(sys.argv[1]), load(sys.argv[2])
+    (gate, gate_failed), (art, art_failed) = (load(sys.argv[1]),
+                                              load(sys.argv[2]))
+    for name, failed in (("gate", gate_failed), ("artifact", art_failed)):
+        for k in sorted(failed):
+            print(f"failed in {name}: {k} ({failed[k]})")
     common = sorted(set(gate) & set(art))
     fam_g, fam_a, fam_n = (defaultdict(float), defaultdict(float),
                            defaultdict(int))

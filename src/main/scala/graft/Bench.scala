@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main (driver contract): runs every SparkEntry query
   * against $SPARK_GRAFT_SF_DIR and prints one JSON line
-  * {"metric":"total","value":sec,"unit":"sec","queries":{name:sec},"sf":dir}.
+  * {"metric":"total","value":sec,"unit":"sec","queries":{name:sec},
+  * "failed":{name:exceptionClass},"prepare_failed":{family:exceptionClass},
+  * "sf":dir}. A query that throws is a failure, never a time: it lands in
+  * `failed` and stays out of `queries` and `value`.
   *
   * Each query is forced through the noop sink rather than count() — count()
   * lets Catalyst prune every computed column (a scan-only measurement),
@@ -36,10 +39,7 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // one-off layout/source staging outside the timed loop — bench should
     // measure the operators, not idempotent one-time writes
-    try SparkEntry.prepare(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] prepare failed: ${e.getMessage}")
-    }
+    val prepareFailed = SparkEntry.prepare(spark, sfDir)
     // dev loop: `runMain graft.Bench q1 q2` times only the named queries;
     // the driver invokes with no args → full sweep
     val selected =
@@ -98,48 +98,8 @@ object Bench {
     val reps = math.max(1, scala.util.Try(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "1").trim.toInt).getOrElse(1))
 
-    // The timing window is this whole function and nothing else — it returns
-    // the elapsed seconds, so cleanup() structurally CANNOT land inside it
-    // (the r2/r3 bug class was cleanup creeping into the timed expression).
-    def timedRun(name: String,
-                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // TRACE=1: stamp each rep as it finishes so an external sampler
-      // (jstack/top) can be correlated with the slow rep it caught
-      if (sys.env.get("SPARK_GRAFT_BENCH_TRACE").contains("1"))
-        System.err.println(f"[bench] trace ${System.currentTimeMillis()}%d " +
-          f"$name $dt%.2f")
-      dt
-    }
-    // true median: average of the two middle elements for even sizes (the
-    // upper-middle pick would report the WORSE of two runs at reps=2)
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-    // per-rep series to stderr: medians hide WHICH rep was slow, and the
-    // r14 dedup_minhash_lsh postmortem stalled for a round on exactly that
-    // (first-touch JIT vs sustained inflation vs bimodal plans all median
-    // the same) — one line per key makes the next dispute self-serve
-    def logReps(tag: String, name: String, ts: Seq[Double]): Unit =
-      System.err.println(s"[bench] $tag $name reps=" +
-        ts.map(t => f"$t%.2f").mkString(","))
-    val raw = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val times = (1 to reps).map { _ =>
-        val dt = timedRun(name, fn)
-        cleanup() // after timedRun returned: provably outside the window
-        dt
-      }
-      logReps("sweep", name, times)
-      name -> times
-    }
+    val (raw, failed) =
+      sweep(spark, sfDir, selected.toSeq.sortBy(_._1), reps, () => cleanup())
     val results = raw.map { case (name, ts) => name -> median(ts) }
 
     // Second pass over the known-variance keys (plus any key whose own
@@ -165,14 +125,15 @@ object Bench {
         ts.max >= 3 * math.max(ts.min, 1e-3) => name
     }
     val soloPairs = (envSolo ++ spreadFlagged).distinct
-      .filter(selected.contains).take(10).map { name =>
+      .filter(k => selected.contains(k) && !failed.contains(k))
+      .take(10).flatMap { name =>
         // one UNTIMED warm rep first: the sweep's cleanup() dropped every
         // cached/persisted intermediate, so a staging-amortizing key's
         // first post-sweep run pays a rebuild its in-sweep runs had warm
         // (dedup_minhash_tradeoff measured 10.1 in-sweep vs 22.5 "solo"
         // purely from that) — a pair where the solo number includes a
         // cold rebuild answers neither question the pairs exist for
-        val warm = timedRun(name, selected(name))
+        val warm = timedRun(spark, sfDir, name, selected(name))
         cleanup()
         // ≥5 reps for solo: the r15 root-cause probes showed these keys'
         // per-rep distribution is BIMODAL under host interference (mode
@@ -182,21 +143,29 @@ object Bench {
         // with p ≈ 0.2-0.3 per key and the pairs re-open every round
         val soloReps = math.max(reps, 5)
         val times = (1 to soloReps).map { _ =>
-          val dt = timedRun(name, selected(name))
+          val r = timedRun(spark, sfDir, name, selected(name))
           cleanup()
-          dt
+          r
         }
-        logReps(f"solo(warm=$warm%.2f)", name, times)
-        name -> median(times)
+        // a key that passed the sweep but throws here has no solo number
+        (warm +: times).partitionMap(identity) match {
+          case (Seq(), warmT +: ts) =>
+            logReps(f"solo(warm=$warmT%.2f)", name, ts)
+            Some(name -> median(ts))
+          case _ => None
+        }
       }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val soloJson = soloPairs.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def obj(kv: Seq[(String, Any)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def classes(m: Map[String, String]): String =
+      obj(m.toSeq.sorted.map { case (k, c) => k -> ("\"" + c + "\"") })
     val total = results.map(_._2).sum
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""solo":$soloJson,"reps":$reps,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec",""" +
+        s""""queries":${obj(results)},"solo":${obj(soloPairs)},""" +
+        s""""failed":${classes(failed)},""" +
+        s""""prepare_failed":${classes(prepareFailed)},""" +
+        s""""reps":$reps,"sf":"$sfDir"}"""
     // full line (per-query breakdown), then a durable file copy, then a
     // SHORT final line — the r1 driver tail-capture truncated the 4 KB full
     // line and lost the total; the short line cannot be truncated away.
@@ -207,7 +176,79 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] file write failed: ${e.getMessage}")
     }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""n_failed":${failed.size},"sf":"$sfDir"}""")
     spark.stop()
   }
+
+  private type Query =
+    (SparkSession, String) => org.apache.spark.sql.DataFrame
+
+  /** One timed run of `fn` through the noop sink: Right(elapsed seconds),
+    * or Left(exception class) when it throws — a thrown key is a failure,
+    * never a time. The timing window is this whole function and nothing
+    * else, so cleanup() structurally CANNOT land inside it (the r2/r3 bug
+    * class was cleanup creeping into the timed expression).
+    */
+  private[graft] def timedRun(spark: SparkSession, sfDir: String,
+      name: String, fn: Query): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    val failure =
+      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: " +
+          s"${e.getClass.getName}: ${e.getMessage}")
+        Some(e.getClass.getName)
+      }
+    val dt = (System.nanoTime() - t0) / 1e9
+    // TRACE=1: stamp each rep as it finishes so an external sampler
+    // (jstack/top) can be correlated with the slow rep it caught
+    if (sys.env.get("SPARK_GRAFT_BENCH_TRACE").contains("1"))
+      System.err.println(f"[bench] trace ${System.currentTimeMillis()}%d " +
+        f"$name $dt%.2f")
+    failure.toLeft(dt)
+  }
+
+  /** Time every query `reps` times, `cleanup` after each rep (after
+    * timedRun returned: provably outside the window). Returns the rep
+    * times of the keys that never threw, and failed key → exception
+    * class for the rest: a key whose run throws is reported, not timed.
+    */
+  private[graft] def sweep(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, Query)], reps: Int, cleanup: () => Unit)
+      : (Seq[(String, Seq[Double])], Map[String, String]) = {
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val timed = queries.flatMap { case (name, fn) =>
+      val runs = (1 to reps).map { _ =>
+        val r = timedRun(spark, sfDir, name, fn)
+        cleanup()
+        r
+      }
+      runs.partitionMap(identity) match {
+        case (Seq(), times) =>
+          logReps("sweep", name, times)
+          Some(name -> times)
+        case (cls +: _, _) =>
+          failed(name) = cls
+          None
+      }
+    }
+    (timed, failed.toMap)
+  }
+
+  // true median: average of the two middle elements for even sizes (the
+  // upper-middle pick would report the WORSE of two runs at reps=2)
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
+  // per-rep series to stderr: medians hide WHICH rep was slow, and the
+  // r14 dedup_minhash_lsh postmortem stalled for a round on exactly that
+  // (first-touch JIT vs sustained inflation vs bimodal plans all median
+  // the same) — one line per key makes the next dispute self-serve
+  private def logReps(tag: String, name: String, ts: Seq[Double]): Unit =
+    System.err.println(s"[bench] $tag $name reps=" +
+      ts.map(t => f"$t%.2f").mkString(","))
 }

@@ -24,16 +24,18 @@ object SparkEntry {
   /** One-off idempotent staging (bucketed/partitioned layouts, streaming
     * source re-materialization) shared by several queries — Bench runs it
     * before the timed loop so per-query numbers measure the operator, not
-    * the one-time writes.
+    * the one-time writes. Returns the families whose staging threw
+    * (family → exception class), which Bench reports as `prepare_failed`.
     */
-  def prepare(spark: SparkSession, sfDir: String): Unit =
+  def prepare(spark: SparkSession, sfDir: String): Map[String, String] =
     prepare(spark, sfDir, stagers)
 
   /** Stager-injectable body, so PrepareSpec can prove one family's failure
     * leaves the remaining families staged and the warm-up running.
     */
   private[graft] def prepare(spark: SparkSession, sfDir: String,
-      stages: Seq[(String, (SparkSession, String) => Unit)]): Unit = {
+      stages: Seq[(String, (SparkSession, String) => Unit)])
+      : Map[String, String] = {
     // Each family stages under its OWN try/catch: r9 ran all four under one
     // (Bench-side) catch, so StreamingOps throwing on a bad events load
     // silently unstaged SimSearch + TextOps and skipped the warm-up —
@@ -41,15 +43,16 @@ object SparkEntry {
     // (~+120 s on BENCH_r09). A staging failure must cost only its own
     // family, and must say so on stderr by name. StreamingOps reads the
     // most drift-prone input (events), so it runs last among the stagers.
-    stages.foreach { case (family, run) =>
-      try run(spark, sfDir)
+    val failed = stages.flatMap { case (family, run) =>
+      try { run(spark, sfDir); None }
       catch { case e: Throwable =>
         System.err.println(
           s"[prepare] $family staging FAILED " +
             s"(${e.getClass.getSimpleName}: ${e.getMessage}); " +
             "its queries will rebuild in-run")
+        Some(family -> e.getClass.getName)
       }
-    }
+    }.toMap
     // JIT/codegen warm-up for the single-run (REPS=1) gate sweep:
     // these keys show the largest REPS=1 − REPS=3 first-touch gaps in
     // the committed artifacts (BENCH_r11 vs bench_r15_reps3:
@@ -99,11 +102,12 @@ object SparkEntry {
       // bpe_train_merges +1.0 s, er_fs_em_classify +0.9 s,
       // er_tf_classify +0.7 s, dedup_simhash +0.5 s — all wide
       // Janino/C2 first-touch plans (codec loops, three-pass ER unions,
-      // iterative trainers) the reps=1 gate otherwise pays in-window
+      // iterative trainers) the reps=1 gate otherwise pays in-window;
+      // dedup_simhash is already warmed by the r15 list above
       "pipeline_curation_census", "dedup_minhash_tradeoff",
       "multimodal_phash_neardup", "er_fs_classify_phonetic",
       "multimodal_audio_features", "bpe_train_merges",
-      "er_fs_em_classify", "er_tf_classify", "dedup_simhash",
+      "er_fs_em_classify", "er_tf_classify",
       // r20 additions: largest rep1 − median(rep2..5) gaps in this
       // round's REPS=5 probes — mine_basket_lift +0.9 s,
       // mine_basket_triples +1.0 s (both now shared-exchange shapes
@@ -121,6 +125,7 @@ object SparkEntry {
               s"(${e.getClass.getSimpleName}: ${e.getMessage})")
         }
       }
+    failed
   }
 
   /** Staging stages by family, isolation unit for [[prepare]]. Exposed so

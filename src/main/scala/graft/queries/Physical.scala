@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -213,44 +214,110 @@ object Physical {
     ()
   }
 
-  /** Manifest-committed table layout (the Delta/Iceberg transaction-log
-    * shape, reduced to its committing primitive): data files land first,
-    * then ONE atomic rename publishes a numbered manifest listing every
-    * live file — readers resolve the highest committed manifest and scan
-    * only its files. What this buys at 100 TB: a writer that dies after
-    * writing data but before its manifest rename leaves ORPHANS that no
-    * reader ever sees (no partial commits), concurrent readers get
-    * snapshot isolation for free (their manifest never mutates), and old
-    * manifests are retained time-travel points. The staged fixture
-    * commits v0 (o_orderkey % 3 = 0) then v1 (appends % 3 = 1), and then
-    * simulates the crashed writer: the % 3 = 2 slice is written to the
-    * data dir with NO manifest commit — the oracle proves those bytes
-    * are invisible through the manifest read path.
-    */
-  private def hfs(s: SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+  // ---- the manifest log ---------------------------------------------
+  //
+  // Every catalog fixture and `sink_*` key below is a composition of the
+  // few primitives in this section — the Delta-Lake design (Armbrust et
+  // al., VLDB 2020) reduced to its committing core: data files land
+  // first (`writeParts`), then ONE atomic publish (`publish`: temp file,
+  // then rename) makes a numbered manifest listing every live file
+  // visible; readers resolve one manifest (`resolve`) and scan only its
+  // files (`manifestRead`). What this buys at 100 TB: a writer that dies
+  // after writing data but before its manifest rename leaves ORPHANS
+  // that no reader ever sees (no partial commits), concurrent readers
+  // get snapshot isolation for free (their manifest never mutates), and
+  // old manifests are retained time-travel points. Layout under a table
+  // `path`: `_commits/vNNNNN.manifest` (`#` meta lines first, then one
+  // data file per line), `_commits/vNNNNN.checkpoint` plus the
+  // `_last_checkpoint` pointer, `_commits/vacuum_NNNNN.tombstone|.done`,
+  // and the numbered-record logs `_refs/<ref>/NNNNN.ref` and
+  // `_pairs/NNNNN.pair`.
 
-  /** `meta` lines (each starting with `#`, e.g. `# batch=3`) ride at the
-    * top of the manifest so a commit can carry transaction markers —
-    * the idempotence token the streaming foreachBatch committer replays
-    * against. Readers skip them.
+  private def hfs(s: SparkSession, p: String): FileSystem =
+    new Path(p).getFileSystem(s.sparkContext.hadoopConfiguration)
+
+  private def commitsDir(path: String) = new Path(path, "_commits")
+
+  private def manifestName(version: Int): String =
+    f"v$version%05d.manifest"
+
+  private def checkpointName(version: Int): String =
+    f"v$version%05d.checkpoint"
+
+  /** The version a `v`-numbered log file name carries (a manifest unless
+    * `suffix` says otherwise); None for every other file in the log.
+    */
+  private[graft] def logVersion(name: String,
+      suffix: String = ".manifest"): Option[Int] =
+    if (!name.startsWith("v") || !name.endsWith(suffix)) None
+    else name.slice(1, name.length - suffix.length).toIntOption
+
+  /** Sorted file names under `dir` (none when `dir` does not exist). */
+  private def names(fs: FileSystem, dir: Path): Seq[String] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).map(_.getPath.getName).sorted.toSeq
+
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
+  /** Write `lines` to a writer-unique temp file beside `dir/name` —
+    * racing writers must never share one — and return it.
+    */
+  private def writeTmp(fs: FileSystem, dir: Path, name: String,
+      lines: Seq[String]): Path = {
+    fs.mkdirs(dir)
+    val tmp = new Path(dir, s".$name.${java.util.UUID.randomUUID()}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(lines.mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+    tmp
+  }
+
+  /** The one atomic publish: write a temp file, then rename it to
+    * `dir/name`. The rename IS the commit — a crash before it leaves no
+    * file, a crash after it a complete one, never a torn list.
+    */
+  private def publish(fs: FileSystem, dir: Path, name: String,
+      lines: Seq[String]): Unit =
+    require(fs.rename(writeTmp(fs, dir, name, lines), new Path(dir, name)),
+      s"publish of $dir/$name failed: rename refused")
+
+  /** Every `part-` data file under `dir`, recursively, in path order —
+    * the one listing behind both commits and vacuum.
+    */
+  private def partFiles(fs: FileSystem, dir: Path): Seq[FileStatus] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
+    if (fs.exists(dir)) {
+      val it = fs.listFiles(dir, true)
+      while (it.hasNext) {
+        val f = it.next()
+        if (f.getPath.getName.startsWith("part-")) out += f
+      }
+    }
+    out.sortBy(_.getPath.toString).toSeq
+  }
+
+  /** Write `df` as parquet to `dir` (replacing it) and return its sorted
+    * `part-` files: the data half of every commit.
+    */
+  private[graft] def writeParts(df: DataFrame, dir: String): Seq[String] = {
+    df.write.mode("overwrite").parquet(dir)
+    partFiles(hfs(df.sparkSession, dir), new Path(dir))
+      .map(_.getPath.toString)
+  }
+
+  /** Publish `files` as manifest `version`. `meta` lines (each starting
+    * with `#`, e.g. `# batch=3`) ride at the top of the manifest so a
+    * commit can carry transaction markers — the idempotence token the
+    * streaming foreachBatch committer replays against.
     */
   private[graft] def commitManifest(s: SparkSession, path: String,
-      version: Int, files: Seq[String], meta: Seq[String] = Nil): Unit = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(path, "_commits")
-    fs.mkdirs(dir)
-    val tmp = new org.apache.hadoop.fs.Path(dir, f".v$version%05d.tmp")
-    val out = fs.create(tmp, true)
-    try out.write((meta ++ files).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    // the rename IS the commit: a crash before it leaves no manifest, a
-    // crash after it leaves a complete one — never a torn file list
-    require(fs.rename(tmp,
-      new org.apache.hadoop.fs.Path(dir, f"v$version%05d.manifest")),
-      s"manifest v$version commit rename failed")
-  }
+      version: Int, files: Seq[String], meta: Seq[String] = Nil): Unit =
+    publish(hfs(s, path), commitsDir(path), manifestName(version),
+      meta ++ files)
 
   // one lock per log path: the in-process arbiter for version claims —
   // see commitManifestCas
@@ -290,33 +357,19 @@ object Physical {
   private[graft] def commitManifestCas(s: SparkSession, path: String,
       newFiles: Seq[String], meta: Seq[String] = Nil): Int = {
     val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(path, "_commits")
-    fs.mkdirs(dir)
+    val dir = commitsDir(path)
     val lock = casLocks.computeIfAbsent(path, _ => new Object)
     var attempt = 0
     while (attempt < 50) {
       val won = lock.synchronized {
-        val commits = listCommits(s, path)
-        val base =
-          if (commits.isEmpty) Nil
-          else readManifestLines(s, path, commits.last)
-            .filterNot(_.startsWith("#"))
-        // parse-last+1, NOT commits.size: after a log vacuum the count
-        // under-counts and a size-based claim would reuse a version
-        val v = commits.lastOption
-          .map(n => n.stripPrefix("v").stripSuffix(".manifest").toInt + 1)
-          .getOrElse(0)
+        val (last, base, _) = resolve(s, path)
+        val v = last + 1
         // writer-unique txn marker: consumed only by the post-claim
         // verification (every manifest reader skips `#` lines)
         val txn = s"# txn=${java.util.UUID.randomUUID()}"
-        // attempt-unique temp: racing writers must never share one
-        val tmp = new org.apache.hadoop.fs.Path(dir,
-          f".v$v%05d.${java.util.UUID.randomUUID()}.tmp")
-        val out = fs.create(tmp, true)
-        try out.write((meta ++ Seq(txn) ++ base ++ newFiles).mkString("\n")
-          .getBytes("UTF-8"))
-        finally out.close()
-        val dst = new org.apache.hadoop.fs.Path(dir, f"v$v%05d.manifest")
+        val dst = new Path(dir, manifestName(v))
+        val tmp = writeTmp(fs, dir, dst.getName,
+          meta ++ Seq(txn) ++ base ++ newFiles)
         val claimed = claimVersion(fs, tmp, dst)
         if (claimed) {
           // fail-fast against a same-version clobber on stores whose
@@ -353,11 +406,10 @@ object Physical {
     * JVM lock — two bare claims of one version must still resolve to
     * exactly one winner.
     */
-  private[graft] def claimVersion(fs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Boolean =
+  private[graft] def claimVersion(fs: FileSystem, tmp: Path,
+      dst: Path): Boolean =
     if ("file" == fs.getUri.getScheme) {
-      def local(p: org.apache.hadoop.fs.Path) =
+      def local(p: Path) =
         java.nio.file.Paths.get(fs.makeQualified(p).toUri.getPath)
       try { java.nio.file.Files.createLink(local(dst), local(tmp)); true }
       catch {
@@ -365,84 +417,428 @@ object Physical {
       }
     } else !fs.exists(dst) && fs.rename(tmp, dst)
 
-  /** The next version number = highest committed version + 1, parsed
-    * from the latest manifest NAME — never `commits.size`: once
-    * [[vacuumLog]] ages out old manifests the count under-counts and a
-    * size-based committer would re-claim (and on POSIX overwrite) a
-    * version number that already exists in histories readers hold.
-    */
-  private[graft] def nextVersion(s: SparkSession, path: String): Int =
-    listCommits(s, path).lastOption
-      .map(n => n.stripPrefix("v").stripSuffix(".manifest").toInt + 1)
-      .getOrElse(0)
-
   /** LOG retention — the manifest-file twin of the data vacuum: keep the
     * newest `keepLast` manifests, delete the older ones. Time travel
-    * beyond the horizon fails LOUDLY ([[manifestRead]]'s "never
-    * committed" require), never silently serves wrong data, and the data
-    * vacuum stays safe because it derives its keep-set from the
-    * manifests that still exist. Each delete is independent and
-    * idempotent, so no tombstone is needed: a crash mid-truncation just
-    * leaves some extra history. Tombstone/done audit files are kept.
+    * beyond the horizon fails LOUDLY ([[resolve]]'s "never committed"
+    * require), never silently serves wrong data, and the data vacuum
+    * stays safe because it derives its keep-set from the manifests that
+    * still exist. Each delete is independent and idempotent, so no
+    * tombstone is needed: a crash mid-truncation just leaves some extra
+    * history. Tombstone/done audit files are kept.
     */
   private[graft] def vacuumLog(s: SparkSession, path: String,
       keepLast: Int): Int = {
     require(keepLast >= 1, "log retention must keep the live version")
     val fs = hfs(s, path)
     val old = listCommits(s, path).dropRight(keepLast)
-    old.foreach(n => fs.delete(
-      new org.apache.hadoop.fs.Path(s"$path/_commits", n), false))
+    old.foreach(n => fs.delete(new Path(commitsDir(path), n), false))
     old.size
   }
 
   /** Committed manifest names under `path/_commits`, version-sorted. */
   private[graft] def listCommits(s: SparkSession, path: String)
-      : Seq[String] = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(path, "_commits")
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.endsWith(".manifest")).sorted.toSeq
-  }
+      : Seq[String] =
+    names(hfs(s, path), commitsDir(path)).filter(logVersion(_).isDefined)
 
-  /** Raw lines of one committed manifest (metadata `#` lines included). */
+  /** Raw lines of one committed log file (metadata `#` lines included). */
   private[graft] def readManifestLines(s: SparkSession, path: String,
-      name: String): Seq[String] = {
-    val fs = hfs(s, path)
-    val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/_commits", name))
-    try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().filter(_.nonEmpty).toList
-    finally in.close()
+      name: String): Seq[String] =
+    readText(hfs(s, path), new Path(commitsDir(path), name))
+      .split("\n").filter(_.nonEmpty).toList
+
+  /** The one version resolver: `asOf` (None = the latest commit) →
+    * (version, data-file lines, `#` meta lines). The latest version is
+    * parsed from the newest manifest NAME, never `commits.size`: once
+    * [[vacuumLog]] ages out old manifests the count under-counts, and a
+    * committer numbering from it would re-claim (and on POSIX
+    * overwrite) a version readers' histories already hold — so every
+    * committer numbers its commit `version + 1` from here. An empty log
+    * resolves the latest to (-1, Nil, Nil), the state a committer starts
+    * from; a version the log does not hold fails by name.
+    */
+  private[graft] def resolve(s: SparkSession, path: String,
+      asOf: Option[Int] = None): (Int, Seq[String], Seq[String]) = {
+    val commits = listCommits(s, path)
+    asOf.orElse(commits.lastOption.flatMap(logVersion(_))) match {
+      case None => (-1, Nil, Nil)
+      case Some(v) =>
+        require(commits.contains(manifestName(v)),
+          s"version $v was never committed under $path")
+        val (meta, files) = readManifestLines(s, path, manifestName(v))
+          .partition(_.startsWith("#"))
+        (v, files, meta)
+    }
   }
 
-  private[graft] def manifestSinkStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_manifest_sink", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
+  /** The file-level diff between two committed versions, as (removed,
+    * added) — version -1 is the empty table before the first commit.
+    */
+  private[graft] def fileDiff(s: SparkSession, path: String, from: Int,
+      to: Int): (Seq[String], Seq[String]) = {
+    def files(v: Int) = if (v < 0) Nil else resolve(s, path, Some(v))._2
+    val (a, b) = (files(from), files(to))
+    (a.diff(b), b.diff(a))
+  }
+
+  /** Read the manifest-committed table at `asOf` (a committed version) or
+    * at the latest commit. Only the listed files are scanned — the data
+    * directory itself is never globbed, which is exactly why orphans and
+    * in-flight writes are invisible. Deletion vectors apply on the way:
+    * any `# dv=` sidecars the manifest carries are anti-joined out on
+    * (file_path, row_index). The DV side is deleted positions only —
+    * kilobytes against a 100 TB scan — so the anti-join broadcasts; a
+    * version with no DV line reads with zero overhead (no metadata
+    * columns materialized).
+    */
+  private[graft] def manifestRead(s: SparkSession, path: String,
+      asOf: Option[Int]): DataFrame = {
+    val (v, files, meta) = resolve(s, path, asOf)
+    require(v >= 0, s"no committed manifest under $path")
+    val data = s.read.parquet(files: _*)
+    val dvs = meta.filter(_.startsWith("# dv=")).map(_.stripPrefix("# dv="))
+    if (dvs.isEmpty) data
+    else data
+      .withColumn("file_path", col("_metadata.file_path"))
+      .withColumn("row_index", col("_metadata.row_index"))
+      .join(broadcast(dvs.map(s.read.parquet(_)).reduce(_ unionByName _)),
+        Seq("file_path", "row_index"), "left_anti")
+      .select(data.columns.toSeq.map(col): _*)
+  }
+
+  // ---- numbered-record logs (refs, pairs) ---------------------------
+  //
+  // A pointer is an append-only log of numbered one-line records
+  // (`NNNNN<suffix>`, last record wins), each published by the same
+  // write-temp + rename primitive as a manifest: a mutate-in-place
+  // pointer (delete + rename) has a crash window with NO pointer on
+  // filesystems without atomic replace, while an append-only log always
+  // leaves the previous record serving reads.
+
+  private def records(fs: FileSystem, dir: Path, suffix: String) =
+    names(fs, dir).filter(_.endsWith(suffix))
+
+  private def appendRecord(s: SparkSession, dir: String, suffix: String,
+      record: String): Unit = {
+    val (fs, d) = (hfs(s, dir), new Path(dir))
+    val seq = records(fs, d, suffix).lastOption
+      .map(_.stripSuffix(suffix).toInt + 1).getOrElse(0)
+    publish(fs, d, f"$seq%05d$suffix", Seq(record))
+  }
+
+  private def lastRecord(s: SparkSession, dir: String,
+      suffix: String): Option[String] = {
+    val (fs, d) = (hfs(s, dir), new Path(dir))
+    records(fs, d, suffix).lastOption
+      .map(n => readText(fs, new Path(d, n)).trim)
+  }
+
+  /** Point `ref` at `version`: append to the ref's own record log. */
+  private[graft] def publishRef(s: SparkSession, path: String,
+      ref: String, version: Int): Unit =
+    appendRecord(s, s"$path/_refs/$ref", ".ref", version.toString)
+
+  /** Resolve a named ref to its published version (None if never
+    * published): the LAST record of the ref log.
+    */
+  private[graft] def readRef(s: SparkSession, path: String,
+      ref: String): Option[Int] =
+    lastRecord(s, s"$path/_refs/$ref", ".ref").map(_.toInt)
+
+  // ---- multi-table atomic commit (pair log) ------------------------
+  //
+  // A fact table and its materialized view each have their own manifest
+  // log; committing them one-at-a-time opens the classic cross-table
+  // window where a reader resolves NEW fact + OLD view (a dashboard
+  // that disagrees with its drill-down). The pair log closes it with
+  // the same one-file-rename primitive as everything else in this
+  // family: one appended record carries BOTH version numbers, so the
+  // (fact, view) pair advances atomically or not at all — a writer
+  // that dies between the two single-table commits has published
+  // nothing (the new versions exist in their logs but no pair record
+  // points at them), exactly Delta's multi-table-transaction gap and
+  // the reason engines that close it (e.g. a catalog-level commit)
+  // arbitrate through ONE atomic pointer swap.
+
+  /** Append a (factVersion, viewVersion) record to `path/_pairs`. */
+  private[graft] def pairCommit(s: SparkSession, path: String,
+      factV: Int, viewV: Int): Unit =
+    appendRecord(s, s"$path/_pairs", ".pair", s"$factV,$viewV")
+
+  /** Resolve the latest atomically-published (fact, view) version pair. */
+  private[graft] def readPair(s: SparkSession,
+      path: String): Option[(Int, Int)] =
+    lastRecord(s, s"$path/_pairs", ".pair").map { txt =>
+      val Array(f, v) = txt.split(",")
+      (f.toInt, v.toInt)
+    }
+
+  // ---- retention VACUUM over the manifest log ----------------------
+  //
+  // The missing fourth leg of the txn story (write / read / evolve /
+  // GC): versioned manifests keep every superseded and failed write's
+  // files on disk forever, and at 100 TB the orphan pile IS the storage
+  // bill. The protocol is tombstone-then-delete, the only order that is
+  // crash-safe: the tombstone (a committed file list) is written
+  // atomically BEFORE any physical delete, so a vacuum that dies
+  // mid-delete leaves a readable table plus a resumable work list —
+  // deletes are idempotent, so replaying the tombstone finishes the job.
+  // Manifests themselves are never deleted (log retention is a separate
+  // axis, exactly Delta's split): version numbering stays dense for the
+  // CAS committer and expired versions fail on their missing FILES, not
+  // on a missing log entry.
+
+  /** `part-` files under `path/data` that none of the manifests
+    * `commits` references — O(#files) metadata, no data read.
+    */
+  private def unreferenced(s: SparkSession, path: String,
+      commits: Seq[String]): Seq[FileStatus] = {
+    val keep = commits.flatMap(c =>
+      readManifestLines(s, path, c).filterNot(_.startsWith("#")))
+      .map(f => new Path(f).toString).toSet
+    partFiles(hfs(s, path), new Path(path, "data"))
+      .filterNot(f => keep.contains(f.getPath.toString))
+  }
+
+  /** Data files deletable under retention-N: every `part-` file in the
+    * data dir that is (a) not referenced by any of the last `retain`
+    * manifests and (b) not newer than the newest manifest — (b) is the
+    * in-flight-writer guard: a concurrent writer's staged-but-uncommitted
+    * files are younger than the latest commit, while a crashed writer's
+    * orphans age past it.
+    */
+  private[graft] def vacuumPlan(s: SparkSession, path: String,
+      retain: Int): Seq[String] = {
+    val commits = listCommits(s, path)
+    require(retain >= 1, "retention must keep at least the live version")
+    require(commits.nonEmpty, s"no committed manifest under $path")
+    val latestMtime = hfs(s, path).getFileStatus(
+      new Path(commitsDir(path), commits.last)).getModificationTime
+    unreferenced(s, path, commits.takeRight(retain))
+      .filter(_.getModificationTime <= latestMtime)
+      .map(_.getPath.toString)
+  }
+
+  /** Commit the vacuum's work list as a numbered tombstone under
+    * `_commits` (published like a manifest; the `.tombstone` suffix keeps
+    * it out of [[listCommits]]). Returns None when nothing is deletable.
+    * A tombstoned file is CONDEMNED — readers at retained versions never
+    * referenced it, so publishing the list before deleting loses nothing
+    * and gains restartability.
+    */
+  private[graft] def vacuumTombstone(s: SparkSession, path: String,
+      retain: Int): Option[String] = {
+    val doomed = vacuumPlan(s, path, retain)
+    if (doomed.isEmpty) None
+    else {
       val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      def writeSlice(name: String,
-          p: org.apache.spark.sql.Column): Seq[String] = {
-        val dir = s"$path/data/$name"
-        t(s, d, "orders").filter(p)
-          .select("o_orderkey", "o_orderstatus", "o_totalprice")
-          .write.mode("overwrite").parquet(dir)
-        fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-          .map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
+      val n = names(fs, commitsDir(path)).count(_.endsWith(".tombstone"))
+      val name = f"vacuum_$n%05d.tombstone"
+      publish(fs, commitsDir(path), name, s"# retain=$retain" +: doomed)
+      Some(name)
+    }
+  }
+
+  /** Execute (or finish, after a crash) every tombstone that has no
+    * `.done` marker: physically delete its files — idempotent, a missing
+    * file is already-done work — then mark it complete. Returns the
+    * number of delete calls issued. Run at vacuum start AND at recovery:
+    * a vacuum that died between tombstone and deletes resumes here.
+    */
+  private[graft] def vacuumResume(s: SparkSession, path: String): Int = {
+    val fs = hfs(s, path)
+    val all = names(fs, commitsDir(path))
+    var deleted = 0
+    all.filter(_.endsWith(".tombstone")).foreach { t =>
+      val done = t.stripSuffix(".tombstone") + ".done"
+      if (!all.contains(done)) {
+        readManifestLines(s, path, t).filterNot(_.startsWith("#"))
+          .foreach { f => if (fs.delete(new Path(f), false)) deleted += 1 }
+        fs.create(new Path(commitsDir(path), done), true).close()
       }
-      val v0 = writeSlice("v0", col("o_orderkey") % 3 === 0)
-      commitManifest(s, path, 0, v0)
-      val v1 = writeSlice("v1", col("o_orderkey") % 3 === 1)
-      commitManifest(s, path, 1, v0 ++ v1)
-      // the crashed writer: bytes on disk, no manifest — must stay
-      // invisible to every manifest reader
-      writeSlice("orphan", col("o_orderkey") % 3 === 2)
+    }
+    deleted
+  }
+
+  /** Retention-N vacuum: finish any interrupted run, tombstone the
+    * currently deletable set, delete it. Returns (files condemned this
+    * run, delete calls issued including resumed work).
+    */
+  private[graft] def vacuumRetention(s: SparkSession, path: String,
+      retain: Int): (Int, Int) = {
+    val resumed = vacuumResume(s, path)
+    val condemned = vacuumTombstone(s, path, retain)
+      .map(t => readManifestLines(s, path, t)
+        .count(!_.startsWith("#"))).getOrElse(0)
+    val deleted = vacuumResume(s, path)
+    (condemned, resumed + deleted)
+  }
+
+  // ---- DELTA-manifest log with periodic checkpoints ------------------
+  //
+  // The full-list manifest log above re-states every live file per
+  // version — one read resolves any version, but each commit is
+  // O(table files). A DELTA log (each commit records only +added /
+  // -removed paths, the Delta-Lake json / Iceberg manifest-list shape)
+  // makes commits O(changed files) — and then a reader is O(versions)
+  // unless checkpoints exist: a periodic full snapshot
+  // (`v%05d.checkpoint`) plus a `_last_checkpoint` pointer, so a read
+  // opens the pointer, one checkpoint, and exactly (v − ck) delta
+  // manifests however long the history grows. That pointer-hop is the
+  // entire reason a 100 TB table with 100k commits still plans in
+  // milliseconds.
+
+  private[graft] def deltaLogCommit(s: SparkSession, path: String,
+      version: Int, added: Seq[String], removed: Seq[String]): Unit =
+    commitManifest(s, path, version,
+      removed.map("-" + _) ++ added.map("+" + _))
+
+  /** Full snapshot at `version` + the `_last_checkpoint` pointer —
+    * pointer written LAST, so a crash between the two leaves readers on
+    * the previous checkpoint (slower, never wrong).
+    */
+  private[graft] def writeCheckpoint(s: SparkSession, path: String,
+      version: Int, files: Seq[String]): Unit = {
+    val fs = hfs(s, path)
+    val dir = commitsDir(path)
+    publish(fs, dir, checkpointName(version), files)
+    // the pointer gets the same temp-file treatment as the checkpoint:
+    // an in-place create() leaves a torn/empty pointer on a mid-write
+    // crash, turning every latest-read into a parse failure
+    val ptmp = writeTmp(fs, dir, "_last_checkpoint", Seq(version.toString))
+    val ptr = new Path(dir, "_last_checkpoint")
+    // delete-then-rename is NOT atomic (rename-over is not atomic-replace
+    // on HDFS): a crash or failed rename in this window leaves no pointer
+    // until the next checkpoint, and the latest-read then degrades to the
+    // listing scan in [[checkpointResolve]] — slower, never wrong. So a
+    // failed delete (stale pointer survives: still correct, extra deltas
+    // replay) or failed rename is tolerated, not fatal: the pointer is a
+    // read optimization, the checkpoint file above is the commit.
+    if (fs.delete(ptr, false) || !fs.exists(ptr)) {
+      if (!fs.rename(ptmp, ptr))
+        System.err.println("[checkpoint] _last_checkpoint rename failed — " +
+          "latest-read falls back to the listing scan until the next publish")
+    } else {
+      // delete failed with the pointer still present: the STALE pointer
+      // survives (correct — extra deltas replay on top of the older
+      // checkpoint), but a persistently failing delete must be visible,
+      // not silent (r19 ADVICE)
+      System.err.println(s"[checkpoint] _last_checkpoint delete failed — " +
+        s"stale pointer (pre-v$version) kept; extra deltas replay until " +
+        "the next successful publish")
+    }
+    // drop a tmp the swap did not consume (a no-op after a successful
+    // rename), so repeated failing publishes don't accumulate
+    try fs.delete(ptmp, false) catch { case _: Throwable => () }
+  }
+
+  /** Resolve the live file set at `asOf` (None = latest): latest read
+    * follows `_last_checkpoint` (one pointer read — no log listing scan
+    * for the checkpoint), time-travel scans the listing for the newest
+    * checkpoint ≤ asOf; then exactly (asOf − ck) delta manifests replay
+    * on top. Returns (files, checkpointVersion, deltasOpened) so the
+    * spec can count the opens.
+    */
+  private[graft] def checkpointResolve(s: SparkSession, path: String,
+      asOf: Option[Int]): (Seq[String], Int, Int) = {
+    val fs = hfs(s, path)
+    val all = names(fs, commitsDir(path))
+    val cks = all.flatMap(logVersion(_, ".checkpoint"))
+    val target = asOf.getOrElse(all.flatMap(logVersion(_)).max)
+    val ck = asOf match {
+      case None =>
+        val p = new Path(commitsDir(path), "_last_checkpoint")
+        // a torn/empty pointer (crash mid-write on a non-atomic FS)
+        // degrades to the listing scan — slower, never wrong
+        val pointed =
+          if (!fs.exists(p)) None else readText(fs, p).trim.toIntOption
+        pointed.getOrElse(cks.lastOption.getOrElse(-1))
+      case Some(v) => cks.filter(_ <= v).lastOption.getOrElse(-1)
+    }
+    val live = scala.collection.mutable.LinkedHashSet.empty[String]
+    if (ck >= 0) live ++= readManifestLines(s, path, checkpointName(ck))
+    val deltas = (ck + 1) to target
+    deltas.foreach { v =>
+      readManifestLines(s, path, manifestName(v)).foreach { l =>
+        if (l.startsWith("+")) live += l.drop(1)
+        else if (l.startsWith("-")) live -= l.drop(1)
+      }
+    }
+    (live.toSeq, ck, deltas.size)
+  }
+
+  // ---- catalog fixtures ----------------------------------------------
+
+  /** A fixture under `Staging.dir(prefix, d)`, rebuilt from an empty
+    * directory by `build` whenever the source `tables` (orders by
+    * default) change, else reused.
+    */
+  private def restaged(s: SparkSession, d: String, prefix: String,
+      tables: String*)(build: String => Unit): String = {
+    val path = graft.Staging.dir(prefix, d)
+    val stamp = graft.Staging.fingerprint(s,
+      (if (tables.isEmpty) Seq("orders") else tables)
+        .map(n => s"$d/$n.parquet"): _*)
+    if (!graft.Staging.isCurrent(path, stamp)) {
+      hfs(s, path).delete(new Path(path), true)
+      build(path)
       graft.Staging.commitStamped(path, stamp)
     }
     path
   }
+
+  /** The three orders columns the catalog fixtures commit. */
+  private def orderRows(s: SparkSession, d: String): DataFrame =
+    t(s, d, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
+
+  /** Write the orders rows matching `p` (as `nFiles` files when > 0) to
+    * `path/data/sub` and return the part files.
+    */
+  private def orderSlice(s: SparkSession, d: String, path: String,
+      sub: String, p: Column, nFiles: Int = 0): Seq[String] = {
+    val rows = orderRows(s, d).filter(p)
+    writeParts(if (nFiles > 0) rows.repartition(nFiles) else rows,
+      s"$path/data/$sub")
+  }
+
+  /** Split `files` of an orders-keyed log by whether they hold a key in
+    * the [40%, 50%] band of the o_orderkey domain (derived, never
+    * hardcoded): (lo, hi, touched, untouched). Discovery is one
+    * distributed pass over the snapshot's `_metadata.file_path` column —
+    * the collect is O(#files), no footer is opened on the driver.
+    */
+  private def keyBand(s: SparkSession, d: String, files: Seq[String])
+      : (Long, Long, Seq[String], Seq[String]) = {
+    val mx = t(s, d, "orders").agg(max("o_orderkey")).head().getLong(0)
+    val lo = math.floor(mx * 0.40).toLong
+    val hi = math.floor(mx * 0.50).toLong
+    val touched = s.read.parquet(files: _*)
+      .select(col("o_orderkey"), col("_metadata.file_path").as("fp"))
+      .filter(col("o_orderkey") >= lo && col("o_orderkey") <= hi)
+      .select("fp").distinct().collect()
+      .map(r => new Path(r.getString(0)).toString).toSet
+    val untouched = files.filterNot(f => touched.contains(new Path(f).toString))
+    require(touched.nonEmpty && untouched.nonEmpty,
+      "fixture must exercise both rewritten and carried-by-reference " +
+        s"files (touched=${touched.size} of ${files.size})")
+    (lo, hi, touched.toSeq.sorted, untouched)
+  }
+
+  /** Manifest-committed sink: commits v0 (o_orderkey % 3 = 0) then v1
+    * (appends % 3 = 1), and then simulates the crashed writer: the
+    * % 3 = 2 slice is written to the data dir with NO manifest commit —
+    * the oracle proves those bytes are invisible through the manifest
+    * read path.
+    */
+  private[graft] def manifestSinkStaged(s: SparkSession, d: String): String =
+    restaged(s, d, "graft_manifest_sink") { path =>
+      val v0 = orderSlice(s, d, path, "v0", col("o_orderkey") % 3 === 0)
+      commitManifest(s, path, 0, v0)
+      commitManifest(s, path, 1,
+        v0 ++ orderSlice(s, d, path, "v1", col("o_orderkey") % 3 === 1))
+      // the crashed writer: bytes on disk, no manifest — must stay
+      // invisible to every manifest reader
+      orderSlice(s, d, path, "orphan", col("o_orderkey") % 3 === 2)
+    }
 
   /** Transactional PARTITION OVERWRITE through the manifest log — the
     * Delta-style `replaceWhere` primitive `sink_partition_overwrite`'s
@@ -461,41 +857,23 @@ object Physical {
     * v1 = retention rewrite of partition F (keep o_totalprice >
     * 150000); v2 = a crashed overwrite of partition O (no commit).
     */
-  private[graft] def txnOverwriteStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_txn_overwrite", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      def writeSlice(sub: String,
-          p: org.apache.spark.sql.Column): Seq[String] = {
-        val dir = s"$path/data/$sub"
-        t(s, d, "orders").filter(p)
-          .select("o_orderkey", "o_orderstatus", "o_totalprice")
-          .write.mode("overwrite").parquet(dir)
-        fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-          .map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
-      }
+  private[graft] def txnOverwriteStaged(s: SparkSession, d: String): String =
+    restaged(s, d, "graft_txn_overwrite") { path =>
       // the partition axis is the BOUNDED status domain (3 values)
       val statuses = t(s, d, "orders").select("o_orderstatus")
         .distinct().collect().map(_.getString(0)).sorted
-      val v0 = statuses.toSeq.flatMap(st =>
-        writeSlice(s"v0/status=$st", col("o_orderstatus") === st))
+      val v0 = statuses.toSeq.flatMap(st => orderSlice(s, d, path,
+        s"v0/status=$st", col("o_orderstatus") === st))
       commitManifest(s, path, 0, v0)
-      val newF = writeSlice("v1/status=F",
+      val newF = orderSlice(s, d, path, "v1/status=F",
         col("o_orderstatus") === "F" && col("o_totalprice") > 150000)
       commitManifest(s, path, 1,
         v0.filterNot(_.contains("/status=F/")) ++ newF)
       // crashed overwrite of partition O: data on disk, no manifest —
       // must stay invisible to every snapshot
-      writeSlice("v2/status=O",
+      orderSlice(s, d, path, "v2/status=O",
         col("o_orderstatus") === "O" && col("o_totalprice") > 200000)
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** MERGE (upsert) as a copy-on-write manifest transaction — the
     * missing half of the catalog surface next to `sink_overwrite_txn`'s
@@ -514,64 +892,31 @@ object Physical {
     * Fixture: target = orders with o_orderkey % 3 ≠ 2; updates set
     * status 'U' inside the key band; inserts = the % 3 = 2 slice.
     */
-  private[graft] def mergeSinkStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_merge_sink", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      def parts(sub: String): Seq[String] =
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/$sub"))
-          .map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
+  private[graft] def mergeSinkStaged(s: SparkSession, d: String): String =
+    restaged(s, d, "graft_merge_sink") { path =>
       // v0: the merge target, range-laid-out on the key so files carry
       // disjoint key ranges — the layout matched-file pruning needs
-      t(s, d, "orders").filter(col("o_orderkey") % 3 =!= 2)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
+      val v0 = writeParts(orderRows(s, d).filter(col("o_orderkey") % 3 =!= 2)
         .repartitionByRange(8, col("o_orderkey"))
-        .sortWithinPartitions("o_orderkey")
-        .write.mode("overwrite").parquet(s"$path/data/v0")
-      val v0 = parts("v0")
+        .sortWithinPartitions("o_orderkey"), s"$path/data/v0")
       commitManifest(s, path, 0, v0)
-      // matched-key band, derived from the key domain (never hardcoded)
-      val mx = t(s, d, "orders").agg(max("o_orderkey")).head().getLong(0)
-      val lo = math.floor(mx * 0.40).toLong
-      val hi = math.floor(mx * 0.50).toLong
-      // matched-file discovery: one distributed pass over the v0
-      // snapshot's file-path metadata column; collect is O(#files)
-      val touched = s.read.parquet(v0: _*)
-        .select(col("o_orderkey"), col("_metadata.file_path").as("fp"))
-        .filter(col("o_orderkey") >= lo && col("o_orderkey") <= hi)
-        .select("fp").distinct().collect().map(r =>
-          new org.apache.hadoop.fs.Path(r.getString(0)).toString).toSet
-      val untouched = v0.filterNot(f =>
-        touched.contains(new org.apache.hadoop.fs.Path(f).toString))
-      require(touched.nonEmpty && untouched.nonEmpty,
-        "fixture must exercise both rewritten and carried-by-reference " +
-          s"files (touched=${touched.size} of ${v0.size})")
+      val (lo, hi, touched, untouched) = keyBand(s, d, v0)
       // rewrite ONLY the touched files whole: matched rows updated,
       // their unmatched neighbors preserved byte-for-value
-      s.read.parquet(touched.toSeq.sorted: _*)
+      val rewrite = writeParts(s.read.parquet(touched: _*)
         .withColumn("o_orderstatus",
           when(col("o_orderkey") >= lo && col("o_orderkey") <= hi,
-            lit("U")).otherwise(col("o_orderstatus")))
-        .write.mode("overwrite").parquet(s"$path/data/v1_rewrite")
+            lit("U")).otherwise(col("o_orderstatus"))),
+        s"$path/data/v1_rewrite")
       // inserts: rows whose key is absent from the target
-      t(s, d, "orders").filter(col("o_orderkey") % 3 === 2)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-        .write.mode("overwrite").parquet(s"$path/data/v1_insert")
-      commitManifest(s, path, 1,
-        untouched ++ parts("v1_rewrite") ++ parts("v1_insert"))
+      val inserts = orderSlice(s, d, path, "v1_insert",
+        col("o_orderkey") % 3 === 2)
+      commitManifest(s, path, 1, untouched ++ rewrite ++ inserts)
       // the crashed second merge: rewrite written, rename never ran —
       // must stay invisible to every manifest reader
-      s.read.parquet(v0: _*)
-        .withColumn("o_orderstatus", lit("X"))
-        .write.mode("overwrite").parquet(s"$path/data/v2_crash")
-      graft.Staging.commitStamped(path, stamp)
+      writeParts(s.read.parquet(v0: _*).withColumn("o_orderstatus", lit("X")),
+        s"$path/data/v2_crash")
     }
-    path
-  }
 
   /** Compaction as a manifest transaction — the maintenance operation a
     * real log-structured table runs nightly: the live snapshot is
@@ -586,42 +931,17 @@ object Physical {
     * Fixture: v0 = orders %3=0 fanned into 12 files, v1 appends %3=1
     * as 12 more (24 live), v2 = the compaction commit (≤3 files).
     */
-  private[graft] def compactTxnStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_compact_txn", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      def writeSlice(sub: String, p: org.apache.spark.sql.Column,
-          nFiles: Int): Seq[String] = {
-        t(s, d, "orders").filter(p)
-          .select("o_orderkey", "o_orderstatus", "o_totalprice")
-          .repartition(nFiles)
-          .write.mode("overwrite").parquet(s"$path/data/$sub")
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/$sub"))
-          .map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
-      }
-      val v0 = writeSlice("v0", col("o_orderkey") % 3 === 0, 12)
+  private[graft] def compactTxnStaged(s: SparkSession, d: String): String =
+    restaged(s, d, "graft_compact_txn") { path =>
+      val v0 = orderSlice(s, d, path, "v0", col("o_orderkey") % 3 === 0, 12)
       commitManifest(s, path, 0, v0)
-      val v1 = writeSlice("v1", col("o_orderkey") % 3 === 1, 12)
-      commitManifest(s, path, 1, v0 ++ v1)
+      commitManifest(s, path, 1,
+        v0 ++ orderSlice(s, d, path, "v1", col("o_orderkey") % 3 === 1, 12))
       // the compaction: read the LIVE snapshot through the log, rewrite
       // small (one read + one write, no shuffle), publish by reference
-      manifestRead(s, path, Some(1))
-        .coalesce(3)
-        .write.mode("overwrite").parquet(s"$path/data/compacted")
-      val compacted =
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/compacted"))
-          .map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
-      commitManifest(s, path, 2, compacted)
-      graft.Staging.commitStamped(path, stamp)
+      commitManifest(s, path, 2, writeParts(
+        manifestRead(s, path, Some(1)).coalesce(3), s"$path/data/compacted"))
     }
-    path
-  }
 
   /** Concurrent-append fixture for the CAS committer: v0 seeds the table,
     * then the %3=1 and %3=2 slices land through [[commitManifestCas]] —
@@ -633,35 +953,14 @@ object Physical {
     * log.
     */
   private[graft] def concurrentAppendStaged(s: SparkSession, d: String)
-      : String = {
-    val path = graft.Staging.dir("graft_concurrent_append", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      def writeSlice(sub: String,
-          p: org.apache.spark.sql.Column): Seq[String] = {
-        t(s, d, "orders").filter(p)
-          .select("o_orderkey", "o_orderstatus", "o_totalprice")
-          .write.mode("overwrite").parquet(s"$path/data/$sub")
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/$sub"))
-          .map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
+      : String =
+    restaged(s, d, "graft_concurrent_append") { path =>
+      Seq("seed", "ingest-a", "ingest-b").zipWithIndex.foreach {
+        case (writer, i) =>
+          commitManifestCas(s, path, orderSlice(s, d, path, s"w$i",
+            col("o_orderkey") % 3 === i), Seq(s"# writer=$writer"))
       }
-      commitManifestCas(s, path,
-        writeSlice("w0", col("o_orderkey") % 3 === 0),
-        Seq("# writer=seed"))
-      commitManifestCas(s, path,
-        writeSlice("w1", col("o_orderkey") % 3 === 1),
-        Seq("# writer=ingest-a"))
-      commitManifestCas(s, path,
-        writeSlice("w2", col("o_orderkey") % 3 === 2),
-        Seq("# writer=ingest-b"))
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** Schema evolution through the manifest log — the ALTER TABLE ADD
     * COLUMN a log-structured table gets without rewriting a byte: v0's
@@ -674,29 +973,14 @@ object Physical {
     * only affordable evolution path: the alternative rewrite moves the
     * whole table to add a nullable column.
     */
-  private[graft] def schemaEvoStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_schema_evo", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      def parts(sub: String): Seq[String] =
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/$sub"))
-          .map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
-      t(s, d, "orders").filter(col("o_orderkey") % 3 === 0)
-        .select("o_orderkey", "o_orderstatus")
-        .write.mode("overwrite").parquet(s"$path/data/v0")
-      commitManifest(s, path, 0, parts("v0"))
-      t(s, d, "orders").filter(col("o_orderkey") % 3 =!= 0)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-        .write.mode("overwrite").parquet(s"$path/data/v1")
-      commitManifest(s, path, 1, parts("v0") ++ parts("v1"))
-      graft.Staging.commitStamped(path, stamp)
+  private[graft] def schemaEvoStaged(s: SparkSession, d: String): String =
+    restaged(s, d, "graft_schema_evo") { path =>
+      val v0 = writeParts(t(s, d, "orders").filter(col("o_orderkey") % 3 === 0)
+        .select("o_orderkey", "o_orderstatus"), s"$path/data/v0")
+      commitManifest(s, path, 0, v0)
+      commitManifest(s, path, 1,
+        v0 ++ orderSlice(s, d, path, "v1", col("o_orderkey") % 3 =!= 0))
     }
-    path
-  }
 
   /** Range-laid-out orders plus a FILE-STATS manifest (file, min/max of
     * the layout key, rows) — the Iceberg/Delta data-skipping shape: the
@@ -729,141 +1013,6 @@ object Physical {
     path
   }
 
-  /** Read the manifest-committed table at `asOf` (a committed version) or
-    * at the latest commit. Only the listed files are scanned — the data
-    * directory itself is never globbed, which is exactly why orphans and
-    * in-flight writes are invisible.
-    */
-  private[graft] def manifestRead(s: SparkSession, path: String,
-      asOf: Option[Int]): DataFrame = {
-    val commits = listCommits(s, path)
-    require(commits.nonEmpty, s"no committed manifest under $path")
-    val chosen = asOf.fold(commits.last) { v =>
-      val name = f"v$v%05d.manifest"
-      require(commits.contains(name), s"version $v was never committed")
-      name
-    }
-    val files = readManifestLines(s, path, chosen)
-      .filterNot(_.startsWith("#")) // transaction-marker metadata lines
-    s.read.parquet(files: _*)
-  }
-
-  // ---- retention VACUUM over the manifest log ----------------------
-  //
-  // The missing fourth leg of the txn story (write / read / evolve /
-  // GC): versioned manifests keep every superseded and failed write's
-  // files on disk forever, and at 100 TB the orphan pile IS the storage
-  // bill. The protocol is tombstone-then-delete, the only order that is
-  // crash-safe: the tombstone (a committed file list) is written
-  // atomically BEFORE any physical delete, so a vacuum that dies
-  // mid-delete leaves a readable table plus a resumable work list —
-  // deletes are idempotent, so replaying the tombstone finishes the job.
-  // Manifests themselves are never deleted (log retention is a separate
-  // axis, exactly Delta's split): version numbering stays dense for the
-  // CAS committer and expired versions fail on their missing FILES, not
-  // on a missing log entry.
-
-  /** Data files deletable under retention-N: every `part-` file in the
-    * data dir that is (a) not referenced by any of the last `retain`
-    * manifests and (b) not newer than the newest manifest — (b) is the
-    * in-flight-writer guard: a concurrent writer's staged-but-uncommitted
-    * files are younger than the latest commit, while a crashed writer's
-    * orphans age past it. O(#files) metadata, no data read.
-    */
-  private[graft] def vacuumPlan(s: SparkSession, path: String,
-      retain: Int): Seq[String] = {
-    val fs = hfs(s, path)
-    val commits = listCommits(s, path)
-    require(retain >= 1, "retention must keep at least the live version")
-    require(commits.nonEmpty, s"no committed manifest under $path")
-    val keep = commits.takeRight(retain).flatMap(c =>
-      readManifestLines(s, path, c).filterNot(_.startsWith("#")))
-      .map(f => new org.apache.hadoop.fs.Path(f).toString).toSet
-    val latestMtime = fs.getFileStatus(new org.apache.hadoop.fs.Path(
-      s"$path/_commits/${commits.last}")).getModificationTime
-    val dataDir = new org.apache.hadoop.fs.Path(s"$path/data")
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (fs.exists(dataDir)) {
-      val it = fs.listFiles(dataDir, true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.startsWith("part-") &&
-          !keep.contains(f.getPath.toString) &&
-          f.getModificationTime <= latestMtime) out += f.getPath.toString
-      }
-    }
-    out.sorted.toSeq
-  }
-
-  /** Commit the vacuum's work list as a numbered tombstone under
-    * `_commits` (same tmp+rename atomicity as a manifest; the
-    * `.tombstone` suffix keeps it out of [[listCommits]]). Returns None
-    * when nothing is deletable. A tombstoned file is CONDEMNED — readers
-    * at retained versions never referenced it, so publishing the list
-    * before deleting loses nothing and gains restartability.
-    */
-  private[graft] def vacuumTombstone(s: SparkSession, path: String,
-      retain: Int): Option[String] = {
-    val doomed = vacuumPlan(s, path, retain)
-    if (doomed.isEmpty) None
-    else {
-      val fs = hfs(s, path)
-      val dir = new org.apache.hadoop.fs.Path(path, "_commits")
-      val n = fs.listStatus(dir).map(_.getPath.getName)
-        .count(_.endsWith(".tombstone"))
-      val name = f"vacuum_$n%05d.tombstone"
-      val tmp = new org.apache.hadoop.fs.Path(dir,
-        f".$name.${java.util.UUID.randomUUID()}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(((s"# retain=$retain" +: doomed)
-        .mkString("\n")).getBytes("UTF-8"))
-      finally out.close()
-      require(fs.rename(tmp, new org.apache.hadoop.fs.Path(dir, name)),
-        s"vacuum tombstone $name commit rename failed")
-      Some(name)
-    }
-  }
-
-  /** Execute (or finish, after a crash) every tombstone that has no
-    * `.done` marker: physically delete its files — idempotent, a missing
-    * file is already-done work — then mark it complete. Returns the
-    * number of delete calls issued. Run at vacuum start AND at recovery:
-    * a vacuum that died between tombstone and deletes resumes here.
-    */
-  private[graft] def vacuumResume(s: SparkSession, path: String): Int = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(path, "_commits")
-    if (!fs.exists(dir)) return 0
-    val names = fs.listStatus(dir).map(_.getPath.getName).toSet
-    var deleted = 0
-    names.filter(_.endsWith(".tombstone")).toSeq.sorted.foreach { t =>
-      val done = t.stripSuffix(".tombstone") + ".done"
-      if (!names.contains(done)) {
-        readManifestLines(s, path, t).filterNot(_.startsWith("#"))
-          .foreach { f =>
-            if (fs.delete(new org.apache.hadoop.fs.Path(f), false))
-              deleted += 1
-          }
-        fs.create(new org.apache.hadoop.fs.Path(dir, done), true).close()
-      }
-    }
-    deleted
-  }
-
-  /** Retention-N vacuum: finish any interrupted run, tombstone the
-    * currently deletable set, delete it. Returns (files condemned this
-    * run, delete calls issued including resumed work).
-    */
-  private[graft] def vacuumRetention(s: SparkSession, path: String,
-      retain: Int): (Int, Int) = {
-    val resumed = vacuumResume(s, path)
-    val condemned = vacuumTombstone(s, path, retain)
-      .map(t => readManifestLines(s, path, t)
-        .count(!_.startsWith("#"))).getOrElse(0)
-    val deleted = vacuumResume(s, path)
-    (condemned, resumed + deleted)
-  }
-
   /** Fixture log for the vacuum keys — built so retention-1 has real
     * work: v0 (6 files) and v1 (append, 6 more) are fully superseded by
     * v2 (a compaction rewrite of the live set), and a crashed writer's
@@ -884,59 +1033,31 @@ object Physical {
     vacuumSinkStaged(s, d, "graft_vacuum_report")
 
   private def vacuumSinkStaged(s: SparkSession, d: String,
-      prefix: String): String = {
-    val path = graft.Staging.dir(prefix, d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      def writeSlice(sub: String, p: org.apache.spark.sql.Column,
-          nFiles: Int): Seq[String] = {
-        t(s, d, "orders").filter(p)
-          .select("o_orderkey", "o_orderstatus", "o_totalprice")
-          .repartition(nFiles)
-          .write.mode("overwrite").parquet(s"$path/data/$sub")
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/$sub"))
-          .map(_.getPath)
-          .filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
-      }
-      val v0 = writeSlice("v0", col("o_orderkey") % 3 === 0, 6)
+      prefix: String): String =
+    restaged(s, d, prefix) { path =>
+      val v0 = orderSlice(s, d, path, "v0", col("o_orderkey") % 3 === 0, 6)
       commitManifest(s, path, 0, v0)
-      val v1 = writeSlice("v1", col("o_orderkey") % 3 === 1, 6)
+      val v1 = orderSlice(s, d, path, "v1", col("o_orderkey") % 3 === 1, 6)
       commitManifest(s, path, 1, v0 ++ v1)
       // crashed writer's orphan — written BEFORE the final commit so the
       // in-flight guard sees it as aged, exactly a real abandoned write
-      writeSlice("orphan", col("o_orderkey") % 3 === 2, 2)
+      orderSlice(s, d, path, "orphan", col("o_orderkey") % 3 === 2, 2)
       // v2 = compaction: the live set rewritten into few files; v0/v1
       // files stay only as time-travel references, i.e. vacuum work
-      s.read.parquet((v0 ++ v1): _*)
-        .coalesce(2)
-        .write.mode("overwrite").parquet(s"$path/data/v2")
-      commitManifest(s, path, 2,
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/v2"))
-          .map(_.getPath).filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq)
-      graft.Staging.commitStamped(path, stamp)
+      commitManifest(s, path, 2, writeParts(
+        s.read.parquet(v0 ++ v1: _*).coalesce(2), s"$path/data/v2"))
     }
-    path
-  }
 
   /** The downstream replica at v0 for `sink_changefeed_apply` — a
     * physical copy of the merge target's pre-merge snapshot, staged once
     * (in production the replica was bootstrapped by an initial full
     * copy; every later sync is feed-apply only, which is the point).
     */
-  private[graft] def cdcReplicaStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_cdc_replica_v0", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
+  private[graft] def cdcReplicaStaged(s: SparkSession, d: String): String =
+    restaged(s, d, "graft_cdc_replica_v0") { path =>
       manifestRead(s, mergeSinkStaged(s, d), Some(0))
         .write.mode("overwrite").parquet(path)
-      graft.Staging.commitStamp(path, stamp)
     }
-    path
-  }
 
   /** Deletion-vector sink (merge-on-read deletes, the Delta DV / Iceberg
     * position-delete shape): v0 writes the table as 4 data files; v1
@@ -949,24 +1070,13 @@ object Physical {
     * touched gigabyte file; the read-side cost is one broadcast anti-join
     * against the DV.
     */
-  private[graft] def dvSinkStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_dv_sink", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      t(s, d, "orders")
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-        .repartition(4)
-        .write.mode("overwrite").parquet(s"$path/data/v0")
-      val v0Files = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$path/data/v0"))
-        .map(_.getPath).filter(_.getName.startsWith("part-"))
-        .map(_.toString).sorted.toSeq
-      commitManifest(s, path, 0, v0Files)
+  private[graft] def dvSinkStaged(s: SparkSession, d: String): String =
+    restaged(s, d, "graft_dv_sink") { path =>
+      val v0 = writeParts(orderRows(s, d).repartition(4), s"$path/data/v0")
+      commitManifest(s, path, 0, v0)
       // v1: merge-on-read delete — capture positions, never rows
       val dvDir = s"$path/dv/v00001"
-      s.read.parquet(v0Files: _*)
+      s.read.parquet(v0: _*)
         .select(col("_metadata.file_path").as("file_path"),
           col("_metadata.row_index").as("row_index"),
           col("o_orderkey"))
@@ -974,65 +1084,43 @@ object Physical {
         .select("file_path", "row_index")
         .coalesce(1)
         .write.mode("overwrite").parquet(dvDir)
-      commitManifest(s, path, 1, v0Files, meta = Seq(s"# dv=$dvDir"))
+      commitManifest(s, path, 1, v0, meta = Seq(s"# dv=$dvDir"))
       // v2: compaction materializes the DV view and drops the sidecar
-      dvRead(s, path, Some(1))
-        .coalesce(2)
-        .write.mode("overwrite").parquet(s"$path/data/v2")
-      val v2Files = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$path/data/v2"))
-        .map(_.getPath).filter(_.getName.startsWith("part-"))
-        .map(_.toString).sorted.toSeq
-      commitManifest(s, path, 2, v2Files)
-      graft.Staging.commitStamped(path, stamp)
+      commitManifest(s, path, 2, writeParts(
+        manifestRead(s, path, Some(1)).coalesce(2), s"$path/data/v2"))
     }
-    path
-  }
 
   /** Write-audit-publish sink (the Iceberg-WAP / Delta-branch release
     * workflow): writers COMMIT to the versioned log but production reads
-    * resolve through a named REF — a one-line pointer file — and a
+    * resolve through a named REF — a one-line pointer record — and a
     * commit only reaches readers when the audit gate passes and the
-    * pointer is atomically swapped. The staged fixture carries the whole
+    * pointer is atomically advanced. The staged fixture carries the whole
     * story: v0 published, v1 a good batch (audited, published), v2 a bad
     * batch (null keys — audit REJECTS it, main never moves). At 100 TB
     * this is how bad data stays out of dashboards without blocking
     * ingestion: the quarantined commit stays in the log for forensics
     * and vacuum-by-retention, invisible behind the ref.
     */
-  private[graft] def wapSinkStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_wap_sink", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      def writeFiles(name: String, df: DataFrame): Seq[String] = {
-        df.coalesce(2).write.mode("overwrite").parquet(s"$path/data/$name")
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/$name"))
-          .map(_.getPath).filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
-      }
-      val base = t(s, d, "orders")
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
+  private[graft] def wapSinkStaged(s: SparkSession, d: String): String =
+    restaged(s, d, "graft_wap_sink") { path =>
+      val base = orderRows(s, d)
+      def batch(name: String, df: DataFrame) =
+        writeParts(df.coalesce(2), s"$path/data/$name")
       // v0: the published starting point
-      val v0 = writeFiles("v0", base.filter(col("o_orderkey") % 3 < 2))
+      val v0 = batch("v0", base.filter(col("o_orderkey") % 3 < 2))
       commitManifest(s, path, 0, v0)
       publishRef(s, path, "main", 0)
       // v1: a good append batch — committed, audited, published
-      val v1 = v0 ++ writeFiles("v1", base.filter(col("o_orderkey") % 3 === 2))
+      val v1 = v0 ++ batch("v1", base.filter(col("o_orderkey") % 3 === 2))
       commitManifest(s, path, 1, v1)
       if (auditPasses(s, path, 1)) publishRef(s, path, "main", 1)
       // v2: a BAD batch (null order keys) — committed, audit rejects,
       // main stays at v1; the commit remains in the log, quarantined
       val bad = base.filter(col("o_orderkey") % 3 === 2)
         .withColumn("o_orderkey", lit(null).cast("long"))
-      val v2 = v1 ++ writeFiles("v2", bad)
-      commitManifest(s, path, 2, v2)
+      commitManifest(s, path, 2, v1 ++ batch("v2", bad))
       if (auditPasses(s, path, 2)) publishRef(s, path, "main", 2)
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** The audit gate a candidate version must pass before publishing:
     * key completeness (no null o_orderkey) and non-regression (at least
@@ -1052,104 +1140,6 @@ object Physical {
         r.getLong(0) == 0L && r.getLong(1) >= pub)
   }
 
-  /** Point `ref` at `version` by appending to the ref's own tiny log
-    * (`_refs/<ref>/NNNNN.ref`, last entry wins) — the same write-temp +
-    * rename-one-file primitive as the manifest log, for the same reason:
-    * a mutate-in-place pointer (delete + rename) has a crash window with
-    * NO pointer on filesystems without atomic replace, while an
-    * append-only log always leaves the previous publish serving reads.
-    */
-  private[graft] def publishRef(s: SparkSession, path: String,
-      ref: String, version: Int): Unit = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(s"$path/_refs", ref)
-    fs.mkdirs(dir)
-    val seq = refEntries(s, path, ref).lastOption
-      .map(_.stripSuffix(".ref").toInt + 1).getOrElse(0)
-    val tmp = new org.apache.hadoop.fs.Path(dir, f".$seq%05d.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(version.toString.getBytes("UTF-8"))
-    finally out.close()
-    require(fs.rename(tmp, new org.apache.hadoop.fs.Path(dir,
-      f"$seq%05d.ref")), s"ref $ref publish rename failed")
-  }
-
-  private def refEntries(s: SparkSession, path: String,
-      ref: String): Seq[String] = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(s"$path/_refs", ref)
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.endsWith(".ref")).sorted.toSeq
-  }
-
-  /** Resolve a named ref to its published version (None if never
-    * published): the LAST entry of the ref log.
-    */
-  private[graft] def readRef(s: SparkSession, path: String,
-      ref: String): Option[Int] = {
-    refEntries(s, path, ref).lastOption.map { name =>
-      val fs = hfs(s, path)
-      val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/_refs/$ref", name))
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-      finally in.close()
-    }
-  }
-
-  // ---- multi-table atomic commit (pair log) ------------------------
-  //
-  // A fact table and its materialized view each have their own manifest
-  // log; committing them one-at-a-time opens the classic cross-table
-  // window where a reader resolves NEW fact + OLD view (a dashboard
-  // that disagrees with its drill-down). The pair log closes it with
-  // the same one-file-rename primitive as everything else in this
-  // family: one appended record carries BOTH version numbers, so the
-  // (fact, view) pair advances atomically or not at all — a writer
-  // that dies between the two single-table commits has published
-  // nothing (the new versions exist in their logs but no pair record
-  // points at them), exactly Delta's multi-table-transaction gap and
-  // the reason engines that close it (e.g. a catalog-level commit)
-  // arbitrate through ONE atomic pointer swap.
-
-  /** Append a (factVersion, viewVersion) record to `path/_pairs` —
-    * write-temp + rename-one-file, append-only, last record wins.
-    */
-  private[graft] def pairCommit(s: SparkSession, path: String,
-      factV: Int, viewV: Int): Unit = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(path, "_pairs")
-    fs.mkdirs(dir)
-    val seq = pairEntries(s, path).lastOption
-      .map(_.stripSuffix(".pair").toInt + 1).getOrElse(0)
-    val tmp = new org.apache.hadoop.fs.Path(dir, f".$seq%05d.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$factV,$viewV".getBytes("UTF-8"))
-    finally out.close()
-    require(fs.rename(tmp, new org.apache.hadoop.fs.Path(dir,
-      f"$seq%05d.pair")), "pair commit rename failed")
-  }
-
-  private def pairEntries(s: SparkSession, path: String): Seq[String] = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(path, "_pairs")
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.endsWith(".pair")).sorted.toSeq
-  }
-
-  /** Resolve the latest atomically-published (fact, view) version pair. */
-  private[graft] def readPair(s: SparkSession,
-      path: String): Option[(Int, Int)] =
-    pairEntries(s, path).lastOption.map { name =>
-      val fs = hfs(s, path)
-      val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/_pairs", name))
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString.trim
-      finally in.close()
-      val Array(f, v) = txt.split(",")
-      (f.toInt, v.toInt)
-    }
-
   /** Pair-transaction fixture: the VIEW gets its own manifest log under
     * `$path/view` (v0 = per-status aggregate of the merge target's v0
     * snapshot, v1 = of v1), and the pair log publishes (fact 0, view 0)
@@ -1159,31 +1149,19 @@ object Physical {
     * ivmViewStaged rule): the consistency check is exact equality, not
     * tolerance.
     */
-  private[graft] def pairTxnStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_pair_txn", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
+  private[graft] def pairTxnStaged(s: SparkSession, d: String): String =
+    restaged(s, d, "graft_pair_txn") { path =>
       val mp = mergeSinkStaged(s, d)
       Seq(0, 1).foreach { v =>
-        manifestRead(s, mp, Some(v))
-          .groupBy("o_orderstatus")
-          .agg(count(lit(1)).as("n_orders"),
-            sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$path/view/data/v$v")
-        val files = fs.listStatus(
-          new org.apache.hadoop.fs.Path(s"$path/view/data/v$v"))
-          .map(_.getPath).filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
-        commitManifest(s, s"$path/view", v, files)
+        commitManifest(s, s"$path/view", v, writeParts(
+          manifestRead(s, mp, Some(v))
+            .groupBy("o_orderstatus")
+            .agg(count(lit(1)).as("n_orders"),
+              sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
+            .coalesce(1), s"$path/view/data/v$v"))
         pairCommit(s, path, v, v)
       }
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** Shallow-clone fixture (the Delta SHALLOW CLONE / Iceberg snapshot
     * branch shape): the clone's v0 manifest lists the SOURCE's current
@@ -1195,30 +1173,17 @@ object Physical {
     * point and fork after it — dev/test-against-prod-data without a
     * copy, the feature's entire value proposition.
     */
-  private[graft] def cloneSinkStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_clone_sink", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      val src = mergeSinkStaged(s, d)
-      val srcFiles = readManifestLines(s, src, "v00001.manifest")
-        .filterNot(_.startsWith("#"))
+  private[graft] def cloneSinkStaged(s: SparkSession, d: String): String =
+    restaged(s, d, "graft_clone_sink") { path =>
+      val (_, srcFiles, _) = resolve(s, mergeSinkStaged(s, d), Some(1))
       commitManifest(s, path, 0, srcFiles)
-      t(s, d, "orders").filter(col("o_orderkey") % 3 === 2)
+      val own = writeParts(t(s, d, "orders")
+        .filter(col("o_orderkey") % 3 === 2)
         .select(col("o_orderkey"), lit("C").as("o_orderstatus"),
           col("o_totalprice"))
-        .coalesce(2)
-        .write.mode("overwrite").parquet(s"$path/data/append")
-      val own = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$path/data/append"))
-        .map(_.getPath).filter(_.getName.startsWith("part-"))
-        .map(_.toString).sorted.toSeq
+        .coalesce(2), s"$path/data/append")
       commitManifest(s, path, 1, srcFiles ++ own)
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** Partition-evolution sink (the Iceberg partition-spec-change shape):
     * v0 wrote the table UNPARTITIONED; the spec then evolved, and v1's
@@ -1233,39 +1198,23 @@ object Physical {
     * (metadata-only) while full pruning arrives only as old files age
     * out through compaction.
     */
-  private[graft] def partEvoStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_partevo_sink", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      val base = t(s, d, "orders")
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      base.filter(col("o_orderkey") % 2 === 0)
-        .repartition(2) // coalesce(2) on a 1-file source stays 1 file
-        .write.mode("overwrite").parquet(s"$path/data/v0")
-      val v0 = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/v0"))
-        .map(_.getPath).filter(_.getName.startsWith("part-"))
-        .map(_.toString).sorted.toSeq
+  private[graft] def partEvoStaged(s: SparkSession, d: String): String =
+    restaged(s, d, "graft_partevo_sink") { path =>
+      val base = orderRows(s, d)
+      val v0 = writeParts(base.filter(col("o_orderkey") % 2 === 0)
+        .repartition(2), // coalesce(2) on a 1-file source stays 1 file
+        s"$path/data/v0")
       commitManifest(s, path, 0, v0)
-      // the evolved append: hive-partitioned, one file per status
+      // the evolved append: hive-partitioned, one file per status; each
+      // leaf's parent dir name IS its `o_orderstatus=<v>` annotation
       base.filter(col("o_orderkey") % 2 === 1)
         .repartition(1)
         .write.partitionBy("o_orderstatus")
         .mode("overwrite").parquet(s"$path/data/v1")
-      val v1 = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/v1"))
-        .filter(_.getPath.getName.startsWith("o_orderstatus="))
-        .flatMap { dir =>
-          val v = dir.getPath.getName.stripPrefix("o_orderstatus=")
-          fs.listStatus(dir.getPath)
-            .map(_.getPath).filter(_.getName.startsWith("part-"))
-            .map(p => s"$p|o_orderstatus=$v")
-        }.sorted.toSeq
+      val v1 = partFiles(hfs(s, path), new Path(s"$path/data/v1"))
+        .map(f => s"${f.getPath}|${f.getPath.getParent.getName}")
       commitManifest(s, path, 1, v0 ++ v1)
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** Read the partition-evolved table, optionally pruning evolved files
     * to one status by MANIFEST METADATA alone. Pre-evolution files are
@@ -1277,8 +1226,7 @@ object Physical {
     */
   private[graft] def partEvoRead(s: SparkSession, path: String,
       status: Option[String]): (DataFrame, Int, Int) = {
-    val lines = readManifestLines(s, path,
-      listCommits(s, path).last).filterNot(_.startsWith("#"))
+    val (_, lines, _) = resolve(s, path)
     val (evolved, plain) = lines.partition(_.contains("|o_orderstatus="))
     val byStatus = evolved.map { l =>
       val Array(p, pv) = l.split('|')
@@ -1299,39 +1247,6 @@ object Physical {
     (all, plain.size + wanted.size, pruned)
   }
 
-  /** Manifest read with deletion-vector masking: data files scan as
-    * usual (with their parquet row positions), and any `# dv=` sidecars
-    * the manifest carries are anti-joined out on (file_path, row_index).
-    * The DV side is deleted positions only — kilobytes against a 100 TB
-    * scan — so the anti-join broadcasts; a version with no DV line reads
-    * with zero overhead (no metadata columns materialized).
-    */
-  private[graft] def dvRead(s: SparkSession, path: String,
-      asOf: Option[Int]): DataFrame = {
-    val commits = listCommits(s, path)
-    require(commits.nonEmpty, s"no committed manifest under $path")
-    val chosen = asOf.fold(commits.last) { v =>
-      val name = f"v$v%05d.manifest"
-      require(commits.contains(name), s"version $v was never committed")
-      name
-    }
-    val lines = readManifestLines(s, path, chosen)
-    val files = lines.filterNot(_.startsWith("#"))
-    val dvs = lines.filter(_.startsWith("# dv="))
-      .map(_.stripPrefix("# dv="))
-    if (dvs.isEmpty) s.read.parquet(files: _*)
-    else {
-      val dv = dvs.map(s.read.parquet(_)).reduce(_ unionByName _)
-      val data = s.read.parquet(files: _*)
-      val cols = data.columns.toSeq
-      data
-        .withColumn("file_path", col("_metadata.file_path"))
-        .withColumn("row_index", col("_metadata.row_index"))
-        .join(broadcast(dv), Seq("file_path", "row_index"), "left_anti")
-        .select(cols.map(col): _*)
-    }
-  }
-
   /** The materialized per-status aggregate of the merge target at v0 —
     * the "view" that `sink_changefeed_ivm` maintains incrementally. Sums
     * are DECIMAL(18,2) (exact, associative), never double: incremental
@@ -1339,135 +1254,41 @@ object Physical {
     * order, and only exact arithmetic guarantees the maintained view
     * equals a from-scratch recompute bit-for-bit at any scale.
     */
-  private[graft] def ivmViewStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_ivm_view_v0", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
+  private[graft] def ivmViewStaged(s: SparkSession, d: String): String =
+    restaged(s, d, "graft_ivm_view_v0") { path =>
       manifestRead(s, mergeSinkStaged(s, d), Some(0))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n0"),
           sum(col("o_totalprice").cast("decimal(18,2)")).as("rev0"))
         .write.mode("overwrite").parquet(path)
-      graft.Staging.commitStamp(path, stamp)
     }
-    path
-  }
 
-  // ---- DELTA-manifest log with periodic checkpoints ------------------
-  //
-  // The full-list manifest log above re-states every live file per
-  // version — one read resolves any version, but each commit is
-  // O(table files). A DELTA log (each commit records only +added /
-  // -removed paths, the Delta-Lake json / Iceberg manifest-list shape)
-  // makes commits O(changed files) — and then a reader is O(versions)
-  // unless checkpoints exist: a periodic full snapshot
-  // (`v%05d.checkpoint`) plus a `_last_checkpoint` pointer, so a read
-  // opens the pointer, one checkpoint, and exactly (v − ck) delta
-  // manifests however long the history grows. That pointer-hop is the
-  // entire reason a 100 TB table with 100k commits still plans in
-  // milliseconds.
-
-  private[graft] def deltaLogCommit(s: SparkSession, path: String,
-      version: Int, added: Seq[String], removed: Seq[String]): Unit =
-    commitManifest(s, path, version,
-      removed.map("-" + _) ++ added.map("+" + _))
-
-  /** Full snapshot at `version` + the `_last_checkpoint` pointer —
-    * pointer written LAST, so a crash between the two leaves readers on
-    * the previous checkpoint (slower, never wrong).
+  /** The row-level change feed of the merge sink's v0 → v1 commit —
+    * (o_orderkey, st0, tp0, st1, tp1, op) — derived by diffing the two
+    * manifests' FILE LISTS first: files carried by reference are
+    * identical by construction and are never read, so the feed's cost
+    * is O(changed files), not O(table). Rows inside a rewritten file
+    * that the merge did NOT match surface on both sides unchanged and
+    * are dropped by the op classifier.
     */
-  private[graft] def writeCheckpoint(s: SparkSession, path: String,
-      version: Int, files: Seq[String]): Unit = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(path, "_commits")
-    val tmp = new org.apache.hadoop.fs.Path(dir, f".v$version%05d.cktmp")
-    val out = fs.create(tmp, true)
-    try out.write(files.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    require(fs.rename(tmp,
-      new org.apache.hadoop.fs.Path(dir, f"v$version%05d.checkpoint")),
-      s"checkpoint v$version rename failed")
-    // the pointer gets the same tmp+rename treatment as the checkpoint:
-    // an in-place create() leaves a torn/empty pointer on a mid-write
-    // crash, turning every latest-read into a parse failure
-    val ptmp = new org.apache.hadoop.fs.Path(dir, "._last_checkpoint.tmp")
-    val p = fs.create(ptmp, true)
-    try p.write(version.toString.getBytes("UTF-8"))
-    finally p.close()
-    val ptr = new org.apache.hadoop.fs.Path(dir, "_last_checkpoint")
-    // delete-then-rename is NOT atomic (rename-over is not atomic-replace
-    // on HDFS): a crash or failed rename in this window leaves no pointer
-    // until the next checkpoint, and the latest-read then degrades to the
-    // listing scan in [[checkpointResolve]] — slower, never wrong. So a
-    // failed delete (stale pointer survives: still correct, extra deltas
-    // replay) or failed rename is tolerated, not fatal: the pointer is a
-    // read optimization, the checkpoint file above is the commit.
-    if (fs.delete(ptr, false) || !fs.exists(ptr)) {
-      if (!fs.rename(ptmp, ptr))
-        System.err.println("[checkpoint] _last_checkpoint rename failed — " +
-          "latest-read falls back to the listing scan until the next publish")
-    } else {
-      // delete failed with the pointer still present: the STALE pointer
-      // survives (correct — extra deltas replay on top of the older
-      // checkpoint), but a persistently failing delete must be visible,
-      // not silent (r19 ADVICE); drop the orphaned tmp so repeated
-      // publishes don't accumulate
-      System.err.println(s"[checkpoint] _last_checkpoint delete failed — " +
-        s"stale pointer (pre-v$version) kept; extra deltas replay until " +
-        "the next successful publish")
-      try fs.delete(ptmp, false) catch { case _: Throwable => () }
-    }
-  }
-
-  /** Resolve the live file set at `asOf` (None = latest): latest read
-    * follows `_last_checkpoint` (one pointer read — no log listing scan
-    * for the checkpoint), time-travel scans the listing for the newest
-    * checkpoint ≤ asOf; then exactly (asOf − ck) delta manifests replay
-    * on top. Returns (files, checkpointVersion, deltasOpened) so the
-    * spec can count the opens.
-    */
-  private[graft] def checkpointResolve(s: SparkSession, path: String,
-      asOf: Option[Int]): (Seq[String], Int, Int) = {
-    val fs = hfs(s, path)
-    val dir = new org.apache.hadoop.fs.Path(path, "_commits")
-    val names = fs.listStatus(dir).map(_.getPath.getName)
-    def ver(n: String, suf: String) =
-      n.stripPrefix("v").stripSuffix(suf).toInt
-    val target = asOf.getOrElse(
-      names.filter(_.endsWith(".manifest")).map(ver(_, ".manifest")).max)
-    val ck = asOf match {
-      case None =>
-        val p = new org.apache.hadoop.fs.Path(dir, "_last_checkpoint")
-        val pointed =
-          if (!fs.exists(p)) None
-          else {
-            val in = fs.open(p)
-            val raw =
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-            // a torn/empty pointer (crash mid-write on a non-atomic FS)
-            // degrades to the listing scan — slower, never wrong
-            raw.trim.toIntOption
-          }
-        pointed.getOrElse(
-          names.filter(_.endsWith(".checkpoint"))
-            .map(ver(_, ".checkpoint")).sorted.lastOption.getOrElse(-1))
-      case Some(v) =>
-        names.filter(_.endsWith(".checkpoint")).map(ver(_, ".checkpoint"))
-          .filter(_ <= v).sorted.lastOption.getOrElse(-1)
-    }
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    if (ck >= 0)
-      live ++= readManifestLines(s, path, f"v$ck%05d.checkpoint")
-    var opened = 0
-    ((ck + 1) to target).foreach { v =>
-      readManifestLines(s, path, f"v$v%05d.manifest").foreach { l =>
-        if (l.startsWith("+")) live += l.drop(1)
-        else if (l.startsWith("-")) live -= l.drop(1)
-      }
-      opened += 1
-    }
-    (live.toSeq, ck, opened)
+  private def mergeFeed(s: SparkSession, d: String): DataFrame = {
+    // removed = pre-images (files the merge replaced); added =
+    // post-images (rewrites + inserts)
+    val (removed, added) = fileDiff(s, mergeSinkStaged(s, d), 0, 1)
+    val before = s.read.parquet(removed: _*)
+      .select(col("o_orderkey"), col("o_orderstatus").as("st0"),
+        col("o_totalprice").as("tp0"))
+    val after = s.read.parquet(added: _*)
+      .select(col("o_orderkey"), col("o_orderstatus").as("st1"),
+        col("o_totalprice").as("tp1"))
+    before.join(after, Seq("o_orderkey"), "full_outer")
+      .withColumn("op",
+        when(col("st0").isNull, "insert")
+          .when(col("st1").isNull, "delete")
+          .when(col("st0") =!= col("st1") ||
+            col("tp0") =!= col("tp1"), "update")
+          .otherwise("unchanged"))
+      .filter(col("op") =!= "unchanged")
   }
 
   /** The checkpointed-log fixture: 10 delta commits over orders slices
@@ -1479,59 +1300,33 @@ object Physical {
     * files), so the aggregate has a plain oracle.
     */
   private[graft] def checkpointSinkStaged(s: SparkSession,
-      d: String): String = {
-    val path = graft.Staging.dir("graft_ckpt_sink", d)
-    val stamp = graft.Staging.fingerprint(s, s"$d/orders.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      val base = t(s, d, "orders")
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      def writeSlice(name: String, p: org.apache.spark.sql.Column,
-          n: Int): Seq[String] = {
-        base.filter(p).repartition(n)
-          .write.mode("overwrite").parquet(s"$path/data/$name")
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/$name"))
-          .map(_.getPath).filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
-      }
+      d: String): String =
+    restaged(s, d, "graft_ckpt_sink") { path =>
       var live = Vector.empty[String]
       val bySlice = scala.collection.mutable.Map.empty[Int, Seq[String]]
       def commitAdd(v: Int, slices: Seq[Int], filesPerSlice: Int): Unit = {
         val added = slices.flatMap { sl =>
-          val fls = writeSlice(s"s$sl",
+          bySlice(sl) = orderSlice(s, d, path, s"s$sl",
             col("o_orderkey") % 10 === sl, filesPerSlice)
-          bySlice(sl) = fls
-          fls
+          bySlice(sl)
         }
         deltaLogCommit(s, path, v, added, Nil)
         live ++= added
       }
       commitAdd(0, Seq(0), 2)
       (1 to 5).foreach(v => commitAdd(v, Seq(v), 1))
-      writeCheckpoint(s, path, 4, live.take(
-        bySlice(0).size + bySlice(1).size + bySlice(2).size +
-          bySlice(3).size + bySlice(4).size))
+      writeCheckpoint(s, path, 4, live.take((0 to 4).map(bySlice(_).size).sum))
       // v6: compaction — slices 0..2 rewritten as ONE file
       val doomed = (0 to 2).flatMap(bySlice(_))
-      val compacted = {
-        s.read.parquet(doomed: _*).coalesce(1)
-          .write.mode("overwrite").parquet(s"$path/data/compact012")
-        fs.listStatus(
-          new org.apache.hadoop.fs.Path(s"$path/data/compact012"))
-          .map(_.getPath).filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
-      }
+      val compacted = writeParts(s.read.parquet(doomed: _*).coalesce(1),
+        s"$path/data/compact012")
       deltaLogCommit(s, path, 6, compacted, doomed)
       live = live.filterNot(doomed.toSet) ++ compacted
       commitAdd(7, Seq(6), 1)
       commitAdd(8, Seq(7), 1)
       writeCheckpoint(s, path, 8, live)
       commitAdd(9, Seq(8, 9), 1)
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** The JOIN-view IVM fixture — the case where incremental maintenance
     * either works or silently double-counts: a per-SEGMENT aggregate
@@ -1552,61 +1347,36 @@ object Physical {
     *  - `view/`: the per-segment aggregate at v0, DECIMAL sums
     *    (ivmViewStaged's exactness rule).
     */
-  private[graft] def joinIvmStaged(s: SparkSession, d: String): String = {
-    val path = graft.Staging.dir("graft_join_ivm2", d)
-    val stamp = graft.Staging.fingerprint(s,
-      s"$d/orders.parquet", s"$d/customer.parquet")
-    if (!graft.Staging.isCurrent(path, stamp)) {
-      val fs = hfs(s, path)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      def parts(sub: String): Seq[String] =
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/data/$sub"))
-          .map(_.getPath).filter(_.getName.startsWith("part-"))
-          .map(_.toString).sorted.toSeq
+  private[graft] def joinIvmStaged(s: SparkSession, d: String): String =
+    restaged(s, d, "graft_join_ivm2", "orders", "customer") { path =>
       // ---- fact log ----
       val fact0 = t(s, d, "orders").filter(col("o_orderkey") % 3 =!= 2)
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      fact0.repartitionByRange(6, col("o_orderkey"))
-        .sortWithinPartitions("o_orderkey")
-        .write.mode("overwrite").parquet(s"$path/data/f0")
-      val f0 = parts("f0")
+      val f0 = writeParts(fact0.repartitionByRange(6, col("o_orderkey"))
+        .sortWithinPartitions("o_orderkey"), s"$path/data/f0")
       commitManifest(s, s"$path/fact", 0, f0)
-      val mx = t(s, d, "orders").agg(max("o_orderkey")).head().getLong(0)
-      val lo = math.floor(mx * 0.40).toLong
-      val hi = math.floor(mx * 0.50).toLong
-      val touched = s.read.parquet(f0: _*)
-        .select(col("o_orderkey"), col("_metadata.file_path").as("fp"))
-        .filter(col("o_orderkey") >= lo && col("o_orderkey") <= hi)
-        .select("fp").distinct().collect().map(r =>
-          new org.apache.hadoop.fs.Path(r.getString(0)).toString).toSet
-      val untouched = f0.filterNot(f =>
-        touched.contains(new org.apache.hadoop.fs.Path(f).toString))
-      require(touched.nonEmpty && untouched.nonEmpty,
-        "join-IVM fixture needs both rewritten and carried files")
-      s.read.parquet(touched.toSeq.sorted: _*)
+      val (lo, hi, touched, untouched) = keyBand(s, d, f0)
+      val rewrite = writeParts(s.read.parquet(touched: _*)
         .withColumn("o_totalprice",
           when(col("o_orderkey") >= lo && col("o_orderkey") <= hi,
-            col("o_totalprice") + 100.0).otherwise(col("o_totalprice")))
-        .write.mode("overwrite").parquet(s"$path/data/f1_rewrite")
-      t(s, d, "orders").filter(col("o_orderkey") % 3 === 2)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .write.mode("overwrite").parquet(s"$path/data/f1_insert")
-      commitManifest(s, s"$path/fact", 1,
-        untouched ++ parts("f1_rewrite") ++ parts("f1_insert"))
+            col("o_totalprice") + 100.0).otherwise(col("o_totalprice"))),
+        s"$path/data/f1_rewrite")
+      val inserts = writeParts(t(s, d, "orders")
+        .filter(col("o_orderkey") % 3 === 2)
+        .select("o_orderkey", "o_custkey", "o_totalprice"),
+        s"$path/data/f1_insert")
+      commitManifest(s, s"$path/fact", 1, untouched ++ rewrite ++ inserts)
       // ---- dim log ----
       val dim0 = t(s, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment").as("seg"))
-      dim0.repartitionByRange(4, col("c_custkey"))
-        .sortWithinPartitions("c_custkey")
-        .write.mode("overwrite").parquet(s"$path/data/d0")
-      commitManifest(s, s"$path/dim", 0, parts("d0"))
-      dim0.withColumn("seg",
+      def dimLayout(df: DataFrame) = df.repartitionByRange(4,
+        col("c_custkey")).sortWithinPartitions("c_custkey")
+      commitManifest(s, s"$path/dim", 0,
+        writeParts(dimLayout(dim0), s"$path/data/d0"))
+      commitManifest(s, s"$path/dim", 1, writeParts(dimLayout(
+        dim0.withColumn("seg",
           when(col("c_custkey") % 50 === 0, lit("REASSIGNED"))
-            .otherwise(col("seg")))
-        .repartitionByRange(4, col("c_custkey"))
-        .sortWithinPartitions("c_custkey")
-        .write.mode("overwrite").parquet(s"$path/data/d1")
-      commitManifest(s, s"$path/dim", 1, parts("d1"))
+            .otherwise(col("seg")))), s"$path/data/d1"))
       // ---- materialized subview (per-custkey fact aggregate at v0) --
       fact0.groupBy("o_custkey")
         .agg(count(lit(1)).as("a_n"),
@@ -1624,18 +1394,11 @@ object Physical {
       // streaming twin tails; written sequentially so file mtimes
       // agree with the serialization: dim v1 commits BEFORE fact v1,
       // which is the order the delta-join algebra assumes) ----
-      def feedEvent(seq: Int, log: String, v: Int): Unit = {
-        val out = fs.create(new org.apache.hadoop.fs.Path(
-          f"$path/feed/ev$seq%05d.txt"), true)
-        try out.write(s"$log,$v".getBytes("UTF-8"))
-        finally out.close()
+      Seq("dim" -> 1, "fact" -> 1).zipWithIndex.foreach {
+        case ((log, v), seq) => publish(hfs(s, path),
+          new Path(s"$path/feed"), f"ev$seq%05d.txt", Seq(s"$log,$v"))
       }
-      feedEvent(0, "dim", 1)
-      feedEvent(1, "fact", 1)
-      graft.Staging.commitStamped(path, stamp)
     }
-    path
-  }
 
   /** The join-view delta fold, factored so the spec can run BOTH the
     * correct algebra and the classic double-counting mistake against
@@ -1654,9 +1417,6 @@ object Physical {
   private[graft] def joinIvmMaintained(s: SparkSession, d: String,
       naive: Boolean): DataFrame = {
     val p = joinIvmStaged(s, d)
-    def files(log: String, v: Int): Seq[String] =
-      readManifestLines(s, s"$p/$log", f"v$v%05d.manifest")
-        .filterNot(_.startsWith("#"))
     def factPart(fls: Seq[String], sign: Int): Option[DataFrame] =
       if (fls.isEmpty) None
       else Some(s.read.parquet(fls: _*)
@@ -1664,24 +1424,24 @@ object Physical {
         .agg((count(lit(1)) * sign).as("dn"),
           (sum(col("o_totalprice").cast("decimal(18,2)")) * sign)
             .as("drev")))
-    val (f0, f1) = (files("fact", 0), files("fact", 1))
-    val deltaA = (factPart(f1.diff(f0), 1) ++ factPart(f0.diff(f1), -1))
+    val (factRemoved, factAdded) = fileDiff(s, s"$p/fact", 0, 1)
+    val deltaA = (factPart(factAdded, 1) ++ factPart(factRemoved, -1))
       .reduce(_ unionByName _)
       .groupBy("o_custkey")
       .agg(sum("dn").as("dn"),
         sum("drev").cast("decimal(28,2)").as("drev"))
-    val (d0, d1) = (files("dim", 0), files("dim", 1))
     val dimAt = (fls: Seq[String]) => s.read.parquet(fls: _*)
     // the fact-delta term joins the dim version the algebra demands
-    val dimForDelta = if (naive) dimAt(d0) else dimAt(d1)
+    val dimForDelta = dimAt(resolve(s, s"$p/dim", Some(if (naive) 0 else 1))._2)
     val term1 = deltaA
       .join(dimForDelta, col("o_custkey") === col("c_custkey"))
       .groupBy("seg")
       .agg(sum("dn").as("tn"), sum("drev").cast("decimal(28,2)").as("tr"))
     // signed dim row diff × the staged per-custkey subview: rows a
     // rewritten dim file carried unchanged cancel ± per (custkey, seg)
-    val dimDelta = dimAt(d1.diff(d0)).withColumn("sign", lit(1))
-      .unionByName(dimAt(d0.diff(d1)).withColumn("sign", lit(-1)))
+    val (dimRemoved, dimAdded) = fileDiff(s, s"$p/dim", 0, 1)
+    val dimDelta = dimAt(dimAdded).withColumn("sign", lit(1))
+      .unionByName(dimAt(dimRemoved).withColumn("sign", lit(-1)))
     val term2 = s.read.parquet(s"$p/aux")
       .join(dimDelta, col("o_custkey") === col("c_custkey"))
       .groupBy("seg")
@@ -2005,29 +1765,12 @@ object Physical {
     "sink_manifest_vacuum" -> ((s, d) => {
       import s.implicits._
       val path = manifestSinkStaged(s, d)
-      val fs = hfs(s, path)
-      val commits = fs.listStatus(
-          new org.apache.hadoop.fs.Path(path, "_commits"))
-        .map(_.getPath.getName).filter(_.endsWith(".manifest")).sorted
-      val referenced = commits.flatMap { c =>
-        val in = fs.open(
-          new org.apache.hadoop.fs.Path(s"$path/_commits", c))
-        try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().filter(_.nonEmpty).toArray
-        finally in.close()
-      }.toSet
-      val it = fs.listFiles(
-        new org.apache.hadoop.fs.Path(s"$path/data"), true)
-      val orphans = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (f.getName.startsWith("part-") &&
-          !referenced.contains(f.toString)) orphans += f.toString
-      }
+      val commits = listCommits(s, path)
+      val orphans = unreferenced(s, path, commits).map(_.getPath.toString)
       val rowsLive = manifestRead(s, path, None).count()
       val rowsOrphaned =
         if (orphans.isEmpty) 0L
-        else s.read.parquet(orphans.toSeq: _*).count()
+        else s.read.parquet(orphans: _*).count()
       Seq((commits.length.toLong, rowsLive, rowsOrphaned))
         .toDF("versions_retained", "rows_live", "rows_orphaned")
     }),
@@ -2046,17 +1789,8 @@ object Physical {
     "sink_vacuum_retention" -> ((s, d) => {
       val path = vacuumSinkStaged(s, d)
       vacuumRetention(s, path, retain = 1)
-      val fs = hfs(s, path)
-      val keep = readManifestLines(s, path, listCommits(s, path).last)
-        .filterNot(_.startsWith("#"))
-        .map(f => new org.apache.hadoop.fs.Path(f).toString).toSet
-      var leftover = 0L
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(s"$path/data"), true)
-      while (it.hasNext) {
-        val f = it.next().getPath
-        if (f.getName.startsWith("part-") && !keep.contains(f.toString))
-          leftover += 1
-      }
+      val leftover = unreferenced(s, path,
+        listCommits(s, path).takeRight(1)).size.toLong
       manifestRead(s, path, None)
         .agg(count(lit(1)).as("rows_live"),
           countDistinct("o_orderstatus").as("n_status"),
@@ -2186,27 +1920,7 @@ object Physical {
     // are idempotent by the same algebra (minus-keys-then-union), pinned
     // in VacuumSpec.
     "sink_changefeed_apply" -> ((s, d) => {
-      val path = mergeSinkStaged(s, d)
-      val m0 = readManifestLines(s, path, "v00000.manifest")
-        .filterNot(_.startsWith("#"))
-      val m1 = readManifestLines(s, path, "v00001.manifest")
-        .filterNot(_.startsWith("#"))
-      val removed = m0.diff(m1)
-      val added = m1.diff(m0)
-      val before = s.read.parquet(removed: _*)
-        .select(col("o_orderkey"), col("o_orderstatus").as("st0"),
-          col("o_totalprice").as("tp0"))
-      val after = s.read.parquet(added: _*)
-        .select(col("o_orderkey"), col("o_orderstatus").as("st1"),
-          col("o_totalprice").as("tp1"))
-      val feed = before.join(after, Seq("o_orderkey"), "full_outer")
-        .withColumn("op",
-          when(col("st0").isNull, "insert")
-            .when(col("st1").isNull, "delete")
-            .when(col("st0") =!= col("st1") ||
-              col("tp0") =!= col("tp1"), "update")
-            .otherwise("unchanged"))
-        .filter(col("op") =!= "unchanged")
+      val feed = mergeFeed(s, d)
         .localCheckpoint(true) // keys consumed by anti-join AND union
       val replica0 = s.read.parquet(cdcReplicaStaged(s, d))
       val applied = replica0
@@ -2240,20 +1954,16 @@ object Physical {
     // aggregate straight from orders, so a view that missed a delta,
     // double-applied one, or drifted in the cents fails the hash.
     "sink_changefeed_ivm" -> ((s, d) => {
-      val path = mergeSinkStaged(s, d)
       val view0 = s.read.parquet(ivmViewStaged(s, d))
-      val m0 = readManifestLines(s, path, "v00000.manifest")
-        .filterNot(_.startsWith("#"))
-      val m1 = readManifestLines(s, path, "v00001.manifest")
-        .filterNot(_.startsWith("#"))
+      val (removed, added) = fileDiff(s, mergeSinkStaged(s, d), 0, 1)
       def part(files: Seq[String], sign: Int) =
         s.read.parquet(files: _*)
           .groupBy("o_orderstatus")
           .agg((count(lit(1)) * sign).as("dn"),
             (sum(col("o_totalprice").cast("decimal(18,2)")) * sign)
               .as("drev"))
-      val delta = part(m0.diff(m1), -1)
-        .unionByName(part(m1.diff(m0), 1))
+      val delta = part(removed, -1)
+        .unionByName(part(added, 1))
         .groupBy("o_orderstatus")
         .agg(sum("dn").as("dn"), sum("drev").as("drev"))
       view0.join(delta, Seq("o_orderstatus"), "full_outer")
@@ -2329,7 +2039,7 @@ object Physical {
             col("revenue"))
       snap("compact_txn", manifestRead(s, compactTxnStaged(s, d), None))
         .unionByName(snap("delete_vectors",
-          dvRead(s, dvSinkStaged(s, d), None)))
+          manifestRead(s, dvSinkStaged(s, d), None)))
         .unionByName(snap("merge_upsert",
           manifestRead(s, mergeSinkStaged(s, d), None)))
         .unionByName(snap("overwrite_txn",
@@ -2399,7 +2109,7 @@ object Physical {
     // drifted a row_index fails the row/hash compare.
     "sink_delete_vectors" -> ((s, d) => {
       val path = dvSinkStaged(s, d)
-      dvRead(s, path, Some(1))
+      manifestRead(s, path, Some(1))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
           round(sum("o_totalprice"), 2).as("revenue"))
@@ -2413,7 +2123,7 @@ object Physical {
     // dv line while v1's data file set is exactly v0's.
     "sink_dv_compact" -> ((s, d) => {
       val path = dvSinkStaged(s, d)
-      dvRead(s, path, None)
+      manifestRead(s, path, None)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
           round(sum("o_totalprice"), 2).as("revenue"))
@@ -2519,33 +2229,12 @@ object Physical {
     // match surface on both sides unchanged and are dropped by the op
     // classifier. The oracle recomputes insert/update counts straight
     // from orders.
-    "sink_changefeed" -> ((s, d) => {
-      val path = mergeSinkStaged(s, d)
-      val m0 = readManifestLines(s, path, "v00000.manifest")
-        .filterNot(_.startsWith("#"))
-      val m1 = readManifestLines(s, path, "v00001.manifest")
-        .filterNot(_.startsWith("#"))
-      val removed = m0.diff(m1) // pre-images: files the merge replaced
-      val added = m1.diff(m0)   // post-images: rewrites + inserts
-      val before = s.read.parquet(removed: _*)
-        .select(col("o_orderkey"), col("o_orderstatus").as("st0"),
-          col("o_totalprice").as("tp0"))
-      val after = s.read.parquet(added: _*)
-        .select(col("o_orderkey"), col("o_orderstatus").as("st1"),
-          col("o_totalprice").as("tp1"))
-      before.join(after, Seq("o_orderkey"), "full_outer")
-        .withColumn("op",
-          when(col("st0").isNull, "insert")
-            .when(col("st1").isNull, "delete")
-            .when(col("st0") =!= col("st1") ||
-              col("tp0") =!= col("tp1"), "update")
-            .otherwise("unchanged"))
-        .filter(col("op") =!= "unchanged")
+    "sink_changefeed" -> ((s, d) =>
+      mergeFeed(s, d)
         .groupBy("op")
         .agg(count(lit(1)).as("n_rows"),
           round(sum("tp1"), 2).as("revenue"))
-        .orderBy("op")
-    }),
+        .orderBy("op")),
 
     // Schema-evolution read path: the merged-schema scan surfaces the
     // column added at v1 as NULL for every v0 row — old files are never
@@ -2554,9 +2243,7 @@ object Physical {
     // dropped the new column from old files' rows nor leaked non-NULL
     // values into them.
     "sink_schema_evolution_txn" -> ((s, d) => {
-      val path = schemaEvoStaged(s, d)
-      val files = readManifestLines(s, path, listCommits(s, path).last)
-        .filterNot(_.startsWith("#"))
+      val (_, files, _) = resolve(s, schemaEvoStaged(s, d))
       // mergeSchema: the reader's side of add-column evolution — the
       // footer union is per-file metadata work, no data rewrite
       s.read.option("mergeSchema", "true").parquet(files: _*)

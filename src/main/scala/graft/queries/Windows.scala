@@ -196,10 +196,14 @@ object Windows {
     // σ² = mean(ln(H/L)²) / (4·ln 2) over daily (max, min) value bars.
     // One bounded daily aggregate (the same shape resample_ohlc folds),
     // then a type-keyed fold over ≤|days| rows; the 4·ln2 constant is
-    // one shared literal. Values are strictly positive in this corpus
-    // so ln(H/L) is total; a zero-range day contributes exactly 0.
+    // one shared literal. A zero-range day contributes exactly 0. Values
+    // are NOT strictly positive (the sf0.1 events carry zero-valued
+    // days): a day with L = 0 has no finite ln(H/L), so try_divide makes
+    // it NULL — the DuckDB twin's x/0 — and it drops out of both avgs
+    // while n_days still counts it. Plain `/` throws DIVIDE_BY_ZERO there
+    // under ANSI mode.
     "win_volatility_parkinson" -> ((s, d) => {
-      val lnHL = log(col("h") / col("l"))
+      val lnHL = log(try_divide(col("h"), col("l")))
       Tables.events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(max("value").as("h"), min("value").as("l"))

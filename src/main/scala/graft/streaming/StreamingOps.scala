@@ -1028,8 +1028,7 @@ object StreamingOps {
           batch.select("fp").distinct().collect()
             .map(r => new org.apache.hadoop.fs.Path(r.getString(0))
               .getName)
-            .filter(_.endsWith(".manifest"))
-            .map(_.stripPrefix("v").stripSuffix(".manifest").toInt)
+            .flatMap(graft.queries.Physical.logVersion(_))
             .sorted
             .foreach(v => applyIvmVersion(s, fact, state, v))
         }
@@ -1101,35 +1100,22 @@ object StreamingOps {
   private[graft] def applyJoinIvmEvent(s: SparkSession, fix: String,
       statePath: String, log: String, version: Int): Unit = {
     val Physical = graft.queries.Physical
-    val commits = Physical.listCommits(s, statePath)
-    val prevLines =
-      if (commits.isEmpty) Nil
-      else Physical.readManifestLines(s, statePath, commits.last)
-    val prevMeta = prevLines.filter(_.startsWith("#"))
+    val (last, prevFiles, prevMeta) = Physical.resolve(s, statePath)
     val applied = prevMeta.filter(_.startsWith("# applied="))
       .map(_.stripPrefix("# applied=").trim).toSet
     if (applied.contains(s"${log}_$version")) return
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def listParts(dir: String): Seq[String] =
-      fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-        .map(_.getPath).filter(_.getName.startsWith("part-"))
-        .map(_.toString).sorted.toSeq
     // current state (bootstrap = the staged v0 snapshots)
     val auxDir = prevMeta.find(_.startsWith("# aux="))
       .map(_.stripPrefix("# aux=").trim).getOrElse(s"$fix/aux")
     val view =
-      if (commits.isEmpty)
+      if (last < 0)
         s.read.parquet(s"$fix/view")
           .select(col("seg"), col("n0").as("n"), col("rev0").as("rev"))
-      else s.read.parquet(prevLines.filterNot(_.startsWith("#")): _*)
-    def logFiles(l: String, v: Int): Seq[String] =
-      Physical.readManifestLines(s, s"$fix/$l", f"v$v%05d.manifest")
-        .filterNot(_.startsWith("#"))
+      else s.read.parquet(prevFiles: _*)
+    lazy val (removed, added) =
+      Physical.fileDiff(s, s"$fix/$log", version - 1, version)
     val (deltaVOpt, newAuxDir) = log match {
       case "dim" =>
-        val cur = logFiles("dim", version)
-        val prev = logFiles("dim", version - 1)
         def part(fls: Seq[String], sign: Int): Option[DataFrame] =
           if (fls.isEmpty) None
           else Some(s.read.parquet(fls: _*).withColumn("sign", lit(sign)))
@@ -1137,8 +1123,8 @@ object StreamingOps {
         // (and a pure-add or pure-remove commit on ONE side) — build
         // each signed leg only when its file list is non-empty, exactly
         // the [[applyIvmVersion]] no-op hardening
-        val dimDeltaOpt = (part(cur.diff(prev), 1) ++
-          part(prev.diff(cur), -1)).reduceOption(_ unionByName _)
+        val dimDeltaOpt = (part(added, 1) ++ part(removed, -1))
+          .reduceOption(_ unionByName _)
         val dv = dimDeltaOpt.map { dimDelta =>
           s.read.parquet(auxDir)
             .join(dimDelta, col("o_custkey") === col("c_custkey"))
@@ -1149,8 +1135,6 @@ object StreamingOps {
         }
         (dv, auxDir)
       case "fact" =>
-        val cur = logFiles("fact", version)
-        val prev = logFiles("fact", version - 1)
         def part(fls: Seq[String], sign: Int): Option[DataFrame] =
           if (fls.isEmpty) None
           else Some(s.read.parquet(fls: _*)
@@ -1158,8 +1142,8 @@ object StreamingOps {
             .agg((count(lit(1)) * sign).as("dn"),
               (sum(col("o_totalprice").cast("decimal(18,2)")) * sign)
                 .as("drev")))
-        val deltaAOpt = (part(cur.diff(prev), 1) ++
-          part(prev.diff(cur), -1)).reduceOption(_ unionByName _)
+        val deltaAOpt = (part(added, 1) ++ part(removed, -1))
+          .reduceOption(_ unionByName _)
         deltaAOpt match {
           case None =>
             // no-op fact commit: nothing to fold into view OR aux
@@ -1177,8 +1161,10 @@ object StreamingOps {
             val dimV = applied.filter(_.startsWith("dim_"))
               .map(_.stripPrefix("dim_").toInt)
               .maxOption.getOrElse(0)
+            val (_, dimFiles, _) =
+              Physical.resolve(s, s"$fix/dim", Some(dimV))
             val dv = deltaA
-              .join(s.read.parquet(logFiles("dim", dimV): _*),
+              .join(s.read.parquet(dimFiles: _*),
                 col("o_custkey") === col("c_custkey"))
               .groupBy("seg")
               .agg(sum("dn").as("dn"),
@@ -1198,36 +1184,26 @@ object StreamingOps {
         }
       case other => sys.error(s"unknown feed log: $other")
     }
-    if (deltaVOpt.isEmpty) {
+    val outDir = s"$statePath/data/${log}_$version"
+    val dataLines = deltaVOpt match {
       // no-op event: commit the marker (so a replay stays idempotent)
       // over the CURRENT data lines — on bootstrap that means
       // materializing the staged v0 view first, so the manifest's data
       // lines are never empty
-      val dataLines =
-        if (commits.nonEmpty) prevLines.filterNot(_.startsWith("#"))
-        else {
-          val outDir = s"$statePath/data/${log}_$version"
-          view.coalesce(1).write.mode("overwrite").parquet(outDir)
-          listParts(outDir)
-        }
-      Physical.commitManifest(s, statePath,
-        Physical.nextVersion(s, statePath), dataLines,
-        meta = prevMeta.filterNot(_.startsWith("# aux=")) ++
-          Seq(s"# aux=$newAuxDir", s"# applied=${log}_$version"))
-      return
+      case None if last >= 0 => prevFiles
+      case None => Physical.writeParts(view.coalesce(1), outDir)
+      case Some(deltaV) =>
+        Physical.writeParts(view.join(deltaV, Seq("seg"), "full_outer")
+          .select(col("seg"),
+            (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L)))
+              .as("n"),
+            (coalesce(col("rev").cast("decimal(28,2)"),
+              lit(0).cast("decimal(28,2)")) +
+              coalesce(col("drev"), lit(0).cast("decimal(28,2)")))
+              .cast("decimal(28,2)").as("rev"))
+          .coalesce(1), outDir)
     }
-    val next = view.join(deltaVOpt.get, Seq("seg"), "full_outer")
-      .select(col("seg"),
-        (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L)))
-          .as("n"),
-        (coalesce(col("rev").cast("decimal(28,2)"),
-          lit(0).cast("decimal(28,2)")) +
-          coalesce(col("drev"), lit(0).cast("decimal(28,2)")))
-          .cast("decimal(28,2)").as("rev"))
-    val outDir = s"$statePath/data/${log}_$version"
-    next.coalesce(1).write.mode("overwrite").parquet(outDir)
-    Physical.commitManifest(s, statePath,
-      Physical.nextVersion(s, statePath), listParts(outDir),
+    Physical.commitManifest(s, statePath, last + 1, dataLines,
       meta = prevMeta.filterNot(_.startsWith("# aux=")) ++
         Seq(s"# aux=$newAuxDir", s"# applied=${log}_$version"))
   }
@@ -1245,19 +1221,13 @@ object StreamingOps {
   private[graft] def applyIvmVersion(s: SparkSession, factPath: String,
       statePath: String, version: Int): Unit = {
     val Physical = graft.queries.Physical
-    val commits = Physical.listCommits(s, statePath)
-    val prevLines =
-      if (commits.isEmpty) Nil
-      else Physical.readManifestLines(s, statePath, commits.last)
-    val prevMarkers = prevLines.filter(_.startsWith("# applied="))
+    val (last, prevFiles, prevMeta) = Physical.resolve(s, statePath)
+    val prevMarkers = prevMeta.filter(_.startsWith("# applied="))
     val applied = prevMarkers
       .map(_.stripPrefix("# applied=").trim.toInt).toSet
     if (applied.contains(version)) return
-    def factFiles(v: Int): Seq[String] =
-      Physical.readManifestLines(s, factPath, f"v$v%05d.manifest")
-        .filterNot(_.startsWith("#"))
-    val cur = factFiles(version)
-    val prev = if (version == 0) Nil else factFiles(version - 1)
+    val (removed, added) =
+      Physical.fileDiff(s, factPath, version - 1, version)
     def part(files: Seq[String], sign: Int): Option[DataFrame] =
       if (files.isEmpty) None
       else Some(s.read.parquet(files: _*)
@@ -1269,42 +1239,31 @@ object StreamingOps {
     // has an EMPTY diff on both sides: fold nothing, but still record the
     // `# applied=` marker so a replay of the no-op stays a structural
     // no-op instead of crashing `.reduce` on an empty iterator.
-    val deltaOpt = (part(cur.diff(prev), 1) ++ part(prev.diff(cur), -1))
-      .reduceOption(_ unionByName _)
-    if (deltaOpt.isEmpty) {
-      Physical.commitManifest(s, statePath,
-        Physical.nextVersion(s, statePath),
-        prevLines.filterNot(_.startsWith("#")),
-        meta = prevMarkers :+ s"# applied=$version")
-      return
+    val files = (part(added, 1) ++ part(removed, -1))
+      .reduceOption(_ unionByName _) match {
+      case None => prevFiles
+      case Some(raw) =>
+        val delta = raw
+          .groupBy("o_orderstatus")
+          .agg(sum("dn").as("dn"),
+            sum("drev").cast("decimal(28,2)").as("drev"))
+        val next =
+          if (last < 0)
+            delta.select(col("o_orderstatus"), col("dn").as("n"),
+              col("drev").as("rev"))
+          else
+            s.read.parquet(prevFiles: _*)
+              .join(delta, Seq("o_orderstatus"), "full_outer")
+              .select(col("o_orderstatus"),
+                (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L)))
+                  .as("n"),
+                (coalesce(col("rev").cast("decimal(28,2)"),
+                  lit(0).cast("decimal(28,2)")) +
+                  coalesce(col("drev"), lit(0).cast("decimal(28,2)")))
+                  .cast("decimal(28,2)").as("rev"))
+        Physical.writeParts(next.coalesce(1), s"$statePath/data/v$version")
     }
-    val delta = deltaOpt.get
-      .groupBy("o_orderstatus")
-      .agg(sum("dn").as("dn"),
-        sum("drev").cast("decimal(28,2)").as("drev"))
-    val next =
-      if (commits.isEmpty)
-        delta.select(col("o_orderstatus"), col("dn").as("n"),
-          col("drev").as("rev"))
-      else
-        s.read.parquet(prevLines.filterNot(_.startsWith("#")): _*)
-          .join(delta, Seq("o_orderstatus"), "full_outer")
-          .select(col("o_orderstatus"),
-            (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L)))
-              .as("n"),
-            (coalesce(col("rev").cast("decimal(28,2)"),
-              lit(0).cast("decimal(28,2)")) +
-              coalesce(col("drev"), lit(0).cast("decimal(28,2)")))
-              .cast("decimal(28,2)").as("rev"))
-    val outDir = s"$statePath/data/v$version"
-    next.coalesce(1).write.mode("overwrite").parquet(outDir)
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(outDir))
-      .map(_.getPath).filter(_.getName.startsWith("part-"))
-      .map(_.toString).sorted.toSeq
-    Physical.commitManifest(s, statePath,
-      Physical.nextVersion(s, statePath), files,
+    Physical.commitManifest(s, statePath, last + 1, files,
       meta = prevMarkers :+ s"# applied=$version")
   }
 
@@ -1343,28 +1302,17 @@ object StreamingOps {
   private[graft] def commitBatchTxn(s: SparkSession, sink: String,
       batch: DataFrame, batchId: Long): Unit = {
     val Physical = graft.queries.Physical
-    val commits = Physical.listCommits(s, sink)
     // every commit carries the FULL committed-batch-id set forward in its
     // markers (see below), so the replay check reads ONE manifest — the
     // previous full-history scan re-read every version's line list per
     // micro-batch, O(commits²) manifest I/O over a long-running stream
-    val prevLines =
-      if (commits.isEmpty) Nil
-      else Physical.readManifestLines(s, sink, commits.last)
-    val prevMarkers = prevLines.filter(_.startsWith("# batch="))
+    val (last, prev, prevMeta) = Physical.resolve(s, sink)
+    val prevMarkers = prevMeta.filter(_.startsWith("# batch="))
     val committedIds = prevMarkers
       .map(_.stripPrefix("# batch=").trim.toLong).toSet
     if (committedIds.contains(batchId)) return
-    val dataDir = s"$sink/data/batch_$batchId"
-    batch.write.mode("overwrite").parquet(dataDir)
-    val fs = new org.apache.hadoop.fs.Path(sink)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(dataDir))
-      .map(_.getPath)
-      .filter(_.getName.startsWith("part-"))
-      .map(_.toString).sorted.toSeq
-    val prev = prevLines.filterNot(_.startsWith("#"))
-    Physical.commitManifest(s, sink, Physical.nextVersion(s, sink),
+    val files = Physical.writeParts(batch, s"$sink/data/batch_$batchId")
+    Physical.commitManifest(s, sink, last + 1,
       prev ++ files, meta = prevMarkers :+ s"# batch=$batchId")
   }
 

@@ -27,8 +27,8 @@ class DeleteVectorSpec extends SparkSpec {
 
   test("masked read drops exactly the predicate rows; v0 time travel " +
     "still sees them") {
-    val v0 = queries.Physical.dvRead(spark, path, Some(0))
-    val v1 = queries.Physical.dvRead(spark, path, Some(1))
+    val v0 = queries.Physical.manifestRead(spark, path, Some(0))
+    val v1 = queries.Physical.manifestRead(spark, path, Some(1))
     assert(v1.filter(col("o_orderkey") % 7 === 3).count() === 0,
       "deleted rows must be invisible through the DV")
     val nDeleted = v0.filter(col("o_orderkey") % 7 === 3).count()
@@ -44,9 +44,9 @@ class DeleteVectorSpec extends SparkSpec {
   }
 
   test("v2 compaction serves the identical live set row for row") {
-    val v1 = queries.Physical.dvRead(spark, path, Some(1))
+    val v1 = queries.Physical.manifestRead(spark, path, Some(1))
       .orderBy("o_orderkey").collect()
-    val v2 = queries.Physical.dvRead(spark, path, Some(2))
+    val v2 = queries.Physical.manifestRead(spark, path, Some(2))
       .orderBy("o_orderkey").collect()
     assert(v1 === v2)
   }

@@ -284,4 +284,42 @@ class OracleLintSpec extends AnyFunSuite {
     }
     assert(problems.isEmpty, problems.mkString("\n", "\n", ""))
   }
+
+  /** The manifest log lives in ONE place: `Physical`'s log section owns
+    * the `vNNNNN.manifest` naming, its parsing and the `part-` data-file
+    * listing, and every committer or reader elsewhere goes through those
+    * helpers (`manifestName`, `logVersion`, `writeParts`, `resolve`). A
+    * second copy is how the log drifted into per-feature variants before
+    * — so any other main file that formats or parses manifest names or
+    * filters `part-` files fails here, and inside Physical each pattern
+    * is pinned to the one use in its log helper.
+    */
+  test("manifest naming, parsing and part-file listing stay in " +
+    "Physical's log section (one copy of the log plumbing)") {
+    val patterns = Seq(
+      "formats a manifest name" -> "%05d.manifest",
+      "parses a manifest name" -> "\".manifest\"",
+      "filters part- files" -> "startsWith(\"part-\")")
+    val inPhysical = Map("formats a manifest name" -> 1,
+      "parses a manifest name" -> 1, "filters part- files" -> 1)
+    val dir = new java.io.File("src/main/scala/graft")
+    assert(dir.isDirectory, s"lint expects to run from the repo root; " +
+      s"missing ${dir.getAbsolutePath}")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val problems = walk(dir).sortBy(_.getPath).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val text = try src.mkString finally src.close()
+      patterns.flatMap { case (what, lit) =>
+        val n = text.sliding(lit.length).count(_ == lit)
+        val allowed =
+          if (f.getName == "Physical.scala") inPhysical(what) else 0
+        if (n == allowed) None
+        else Some(s"${f.getName}: $what $n time(s), expected $allowed " +
+          s"(`$lit`) — use Physical's log helpers instead")
+      }
+    }
+    assert(problems.isEmpty, problems.mkString("\n", "\n", ""))
+  }
 }

@@ -20,9 +20,11 @@ class PrepareSpec extends SparkSpec {
     val errBuf = new java.io.ByteArrayOutputStream()
     val realErr = System.err
     System.setErr(new java.io.PrintStream(errBuf, true))
-    try SparkEntry.prepare(spark, sf, stages)
+    val failed = try SparkEntry.prepare(spark, sf, stages)
     finally System.setErr(realErr)
     val err = errBuf.toString
+    assert(failed === Map("boomFamily" -> "java.lang.RuntimeException"),
+      "the failed family must be returned for Bench's prepare_failed")
     assert(ran.toSeq === Seq("afterA", "afterB"),
       "stages after a failure must still run")
     assert(err.contains("boomFamily staging FAILED"),
